@@ -581,11 +581,15 @@ class EngineServer:
                     )
                 if self._built(name):
                     progress(0, 1, "upserting")
-                    rep = mnt.IndexMaintenance(
-                        self.spark, self.warehouse, name
-                    ).upsert_documents(df)
+                    # a delta commit costs O(batch + vocabulary), never an
+                    # index rewrite; the ratio policy folds the deltas
+                    # only once they outweigh one compaction
+                    m = mnt.IndexMaintenance(self.spark, self.warehouse, name)
+                    rep = m.upsert_documents(df, mode="delta")
+                    m.maybe_compact()
                     progress(1, 1, "done")
-                    return rep
+                    return {"updated": rep["updated"],
+                            "inserted": rep["inserted"]}
                 builder = IndexBuilder(self.spark, settings, self.warehouse)
                 report = builder.build(df, num_shards=4, progress_cb=progress)
                 return {
@@ -601,9 +605,9 @@ class EngineServer:
         """S5 listing, deterministic by doc_id (the reference's map-order
         listing is nondeterministic, document_handlers.go:161-233)."""
         eng = self._engine(name)
-        # revalidate against the on-disk generation: a refresh-mode
-        # maintenance job rewrites docs/ (rmtree+rename), and a stale
-        # cached DataFrame would reference deleted part files
+        # revalidate against the on-disk generation: every maintenance
+        # commit bumps it, and a stale cached DataFrame would miss the
+        # newest delta rows or outlive a GC'd generation's part files
         eng._ensure_fresh()
         try:
             page = max(int(query.get("page", ["1"])[0]), 1)
@@ -729,9 +733,10 @@ class EngineServer:
         def run(progress):
             with self._index_lock(name):
                 progress(0, 1, "deleting")
-                n = mnt.IndexMaintenance(
-                    self.spark, self.warehouse, name
-                ).delete_documents(ids)
+                # delta commit + ratio policy, as in add_documents
+                m = mnt.IndexMaintenance(self.spark, self.warehouse, name)
+                n = m.delete_documents(ids, mode="delta")
+                m.maybe_compact()
                 progress(1, 1, "done")
                 return {"deleted": n}
 

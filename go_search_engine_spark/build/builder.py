@@ -865,9 +865,9 @@ class IndexBuilder:
 
     def _gc_generations(self, prev_stats: dict, new_stats: dict) -> None:
         """Best-effort, post-commit removal of superseded generation
-        roots (``tables_gen=*``, ``term_stats_gen=*``, plain table dirs),
-        keeping the roots active under either ``prev_stats`` (reader
-        grace window) or ``new_stats``."""
+        roots (``tables_gen=*``, ``term_stats_gen=*``, plain table dirs,
+        folded ``_delta`` generations), keeping the roots active under
+        either ``prev_stats`` (reader grace window) or ``new_stats``."""
         import glob as _glob
 
         from .delta import DELTA_DIR, TABLE_DIRS, generation_roots
@@ -883,6 +883,13 @@ class IndexBuilder:
             keep.add(os.path.join(self.base, DELTA_DIR))
         cands = _glob.glob(os.path.join(self.base, "tables_gen=*"))
         cands += _glob.glob(os.path.join(self.base, "term_stats_gen=*"))
+        # delta gens at or below prev_stats' floor were folded one
+        # compaction ago: no reader of either snapshot can see them
+        floor = int(prev_stats.get("delta_floor", 0))
+        cands += [
+            d for d in _glob.glob(os.path.join(self.base, DELTA_DIR, "*", "gen=*"))
+            if int(d.rsplit("=", 1)[1]) <= floor
+        ]
         cands += [os.path.join(self.base, n) for n in TABLE_DIRS]
         cands += [os.path.join(self.base, DELTA_DIR)]
         for d in cands:

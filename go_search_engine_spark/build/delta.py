@@ -1,13 +1,14 @@
 """Incremental (LSM/NRT-style) index maintenance: delta segments,
 tombstones, generation-based visibility.
 
-The default maintenance path (`IndexMaintenance.upsert_documents` /
-`delete_documents`) rewrites docs+segments and recomputes stats/blocks --
-O(index) work per batch, like the reference's whole-index gob snapshot
-per write (internal/engine/async_operations.go:192-199). At 100 TB that
-cost is the scale-killer: a 100-document upsert must not re-encode a
-100 TB block table. ``mode="delta"`` instead appends immutable delta
-files and touches only vocab-sized state:
+Every document mutation (`IndexMaintenance.upsert_documents` /
+`delete_documents`) commits here: it appends immutable delta files and
+touches only vocab-sized state, instead of the O(index) rewrite per
+write the reference pays with its whole-index gob snapshot
+(internal/engine/async_operations.go:192-199) -- at 100 TB a
+100-document upsert must not re-encode a 100 TB block table.
+``mode="refresh"`` is this commit followed by ``compact_segments()``,
+which folds the deltas into a fresh base generation. Layout:
 
   {index}/_delta/postings/gen=G/    flat POSTINGS_SCHEMA rows (new/updated
                                     docs' postings; tiny, unencoded)
@@ -35,9 +36,9 @@ later commit. The previous term_stats directory is retained one commit as a
 grace window for in-flight readers; older ones are garbage-collected
 after the commit point.
 
-Exact-stats arithmetic (what keeps delta results bit-identical to a full
-refresh): df' = df - |docs leaving the term| + |docs joining it| (from
-re-tokenizing the old rows + the new batch), idf recomputed for EVERY
+Exact-stats arithmetic (what keeps delta results bit-identical to the
+compacted index): df' = df - |docs leaving the term| + |docs joining
+it| (from re-tokenizing the old rows + the new batch), idf recomputed for EVERY
 term from the new N (term_stats is vocab-sized -- rewriting it is cheap
 relative to the corpus), total_dl +- integer deltas => avgdl exact,
 field_bounds merged monotonically (sound, possibly loose after deletes
@@ -63,7 +64,7 @@ from pyspark.sql import functions as F
 DELTA_DIR = "_delta"
 
 # the four index tables whose directories are generation-addressed by
-# refresh-mode maintenance (see table_path)
+# compaction and live rebuilds (see table_path)
 TABLE_DIRS = ("docs", "segments", "term_stats", "blocks")
 
 
@@ -101,11 +102,10 @@ def table_path(base: str, name: str, stats: dict | None = None) -> str:
     Three layouts, committed by the atomic stats.json pointer flip:
 
     - fresh build: plain ``{base}/{name}`` (no pointer keys);
-    - refresh-mode maintenance (upsert/delete/compact): ALL FOUR tables
-      rewritten under ``{base}/tables_gen={R}/{name}`` with
-      ``stats["tables_gen"] = R`` -- the previous generation's
-      directories are retained one commit as a grace window for
-      in-flight readers, so a LIVE engine mid-query never loses its
+    - compaction or live rebuild: ALL FOUR tables rewritten under
+      ``{base}/tables_gen={R}/{name}`` with ``stats["tables_gen"] = R``
+      -- the previous generation's directories are retained one commit
+      as a grace window for in-flight readers, so a LIVE engine mid-query never loses its
       files to an rmtree (the reference takes a full index lock for
       every rewrite, service.go:99-100; immutable generations + a
       pointer flip are the lock-free equivalent, and the same shape an
@@ -165,8 +165,8 @@ def delta_floor(base: str, stats: dict | None = None) -> int:
     rows at its own generation: folded docs would surface twice and the
     deleted victim would stay visible. Monotone gens also mean a commit
     never overwrites a directory an in-flight graced reader is scanning.
-    ``_finalize`` carries the floor forward through every refresh-mode
-    rewrite (build/builder.py)."""
+    ``_finalize`` carries the floor forward through every compaction and
+    rebuild (build/builder.py)."""
     if stats is None:
         stats = _load_stats_or_empty(base)
     return int(stats.get("delta_floor", 0))
@@ -181,19 +181,34 @@ def next_delta_gen(base: str) -> int:
     ) + 1
 
 
+def _read_gens(
+    spark: SparkSession, base: str, table: str, max_gen: int,
+    stats: dict | None,
+) -> DataFrame | None:
+    """One delta table's committed, unfolded generations (with the
+    ``gen`` partition column): exactly the dirs ``delta_floor < gen <=
+    max_gen`` that exist (a delete writes no docs dir), or None. Reading
+    them by name instead of listing the table root keeps a reader clear
+    of the folded generations a compaction's GC is removing."""
+    root = delta_path(base, table)
+    paths = [
+        p for g in range(delta_floor(base, stats) + 1, max_gen + 1)
+        if os.path.isdir(p := os.path.join(root, f"gen={g}"))
+    ]
+    if not paths:
+        return None
+    return spark.read.option("basePath", root).parquet(*paths)
+
+
 def read_tombstones(
     spark: SparkSession, base: str, max_gen: int,
     stats: dict | None = None,
 ) -> DataFrame | None:
     """(doc_id, tgen = max tombstone generation), committed gens only
     (gens at or below the compaction floor are folded state)."""
-    p = delta_path(base, "tombstones")
-    if not os.path.isdir(p):
+    t = _read_gens(spark, base, "tombstones", max_gen, stats)
+    if t is None:
         return None
-    floor = delta_floor(base, stats)
-    t = spark.read.parquet(p).filter(
-        (F.col("gen") <= max_gen) & (F.col("gen") > floor)
-    )
     return t.groupBy("doc_id").agg(F.max("gen").alias("tgen"))
 
 
@@ -218,11 +233,8 @@ def read_delta_postings(
 ) -> DataFrame:
     """Flat delta postings (POSTINGS_SCHEMA + gen partition column),
     committed gens only (above the compaction floor); NOT yet
-    visibility-filtered."""
-    floor = delta_floor(base, stats)
-    return spark.read.parquet(delta_path(base, "postings")).filter(
-        (F.col("gen") <= max_gen) & (F.col("gen") > floor)
-    )
+    visibility-filtered. Every delta commit writes a postings dir."""
+    return _read_gens(spark, base, "postings", max_gen, stats)
 
 
 def read_visible_docs(
@@ -240,16 +252,9 @@ def read_visible_docs(
         return docs
     max_gen = max_committed_gen(base, stats)
     cols = docs.columns
-    parts = [docs.withColumn("gen", F.lit(0))]
-    ddocs_path = delta_path(base, "docs")
-    if os.path.isdir(ddocs_path):
-        floor = delta_floor(base, stats)
-        ddocs = spark.read.parquet(ddocs_path).filter(
-            (F.col("gen") <= max_gen) & (F.col("gen") > floor)
-        )
-        parts.append(ddocs.select(*cols, "gen"))
-    allrows = parts[0]
-    for p in parts[1:]:
-        allrows = allrows.unionByName(p)
+    allrows = docs.withColumn("gen", F.lit(0))
+    ddocs = _read_gens(spark, base, "docs", max_gen, stats)
+    if ddocs is not None:
+        allrows = allrows.unionByName(ddocs.select(*cols, "gen"))
     tomb = read_tombstones(spark, base, max_gen, stats)
     return apply_visibility(allrows, "gen", tomb).drop("gen")

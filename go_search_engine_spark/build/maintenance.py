@@ -3,12 +3,17 @@
 Reference equivalents:
 - T11 delete document: strips the doc's entries from every posting list
   and drops empty terms (/root/reference/internal/indexing/
-  service.go:344-427). Here: anti-join on the segments + docs tables,
-  then a stats/blocks refresh -- the batch expression of the same
-  mutation. On Iceberg this would be a MERGE/DELETE commit; on local
-  parquet it rewrites the affected tables.
+  service.go:344-427). Here: one delta commit of tombstones plus the
+  exact vocab-sized term_stats rewrite (build/delta.py) -- the batch
+  expression of the same mutation, the shape an Iceberg MERGE/DELETE
+  commit has.
 - T13 update document: delete-then-add (service.go:166-215) => here
-  upsert = anti-join + union + refresh.
+  upsert = tombstones for the old rows + delta docs/postings for the new
+  ones, in the same single delta commit.
+- Every document mutation commits through that one protocol
+  (``_delta_commit``). ``mode="refresh"`` is the delta commit followed by
+  ``compact_segments()``, which folds the pending deltas into a fresh
+  base generation.
 - T12 delete all / T14 bulk reindex: clear + rebuild
   (service.go:324-340, bulk_operations.go:427-467) => builder re-run with
   resume=False.
@@ -22,9 +27,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IndexSettings
@@ -138,6 +142,31 @@ def update_settings(
 
 # --- T11/T13: document-level maintenance ------------------------------------
 
+def _metrics(obs, frame: DataFrame, *aggs) -> dict:
+    """An Observation's metrics. A zero-task write (an empty frame, or an
+    AQE-coalesced empty side) never posts them; one agg job stands in."""
+    try:
+        return obs.get
+    except Exception:
+        return frame.agg(*aggs).collect()[0].asDict()
+
+
+def _write_observed(frame: DataFrame, path: str, *aggs, cols=None) -> dict:
+    """Write ``frame`` (its ``cols`` if given) with ``aggs`` observed on
+    the write itself -- zero extra Spark jobs -- and return them."""
+    obs = Observation()
+    out = frame.observe(obs, *aggs)
+    (out.select(*cols) if cols else out).write.mode("overwrite").parquet(path)
+    return _metrics(obs, frame, *aggs)
+
+
+def _check_mode(mode: str) -> None:
+    if mode not in ("refresh", "delta"):
+        # a typo ('Delta', 'incremental') must fail loudly, not silently
+        # pick one of the two behaviours
+        raise ValueError(f"mode must be 'refresh' or 'delta', got {mode!r}")
+
+
 class IndexMaintenance:
     def __init__(self, spark: SparkSession, warehouse: str, name: str):
         self.spark = spark
@@ -146,30 +175,25 @@ class IndexMaintenance:
         self.settings = load_settings(self.base)
         self.builder = IndexBuilder(self.spark, self.settings, warehouse)
 
-    def _refresh(
-        self, docs: DataFrame, segments: DataFrame,
-        num_shards: int | None = None,
-    ) -> None:
-        """Rewrite docs + segments, then recompute stats/blocks via the
-        builder's finalize (the sorted-merge).
+    def _refresh(self, docs: DataFrame, segments: DataFrame) -> None:
+        """Compaction's rewrite step: write docs + segments, then recompute
+        stats/blocks via the builder's finalize (the sorted-merge).
 
-        Every rewrite goes into a FRESH generation root
+        The rewrite goes into a FRESH generation root
         (``tables_gen={R}/``, build/delta.py table_path) and becomes
         visible only at finalize's atomic stats.json pointer flip; the
         previous generation's files are retained one commit as a grace
         window. A LIVE engine mid-query therefore keeps reading its
         (complete, immutable) old generation and picks up the new one at
-        its next generation check -- queries concurrent with an
-        upsert/delete/compaction see either the pre- or post-rewrite
-        index, never a mix, a deleted-file error, or a lock (the
-        reference holds a full per-index mutex across its rewrite,
-        service.go:99-100)."""
-        from .builder import load_stats
+        its next generation check -- queries concurrent with a compaction
+        see either the pre- or post-rewrite index, never a mix, a
+        deleted-file error, or a lock (the reference holds a full
+        per-index mutex across its rewrite, service.go:99-100)."""
+        from .builder import BuildReport, load_stats
 
-        if num_shards is None:
-            # resolve BEFORE the rewrite: the fallback reads the OLD docs
-            # table, which is about to be replaced (and may become empty)
-            num_shards = self._num_shards()
+        # resolve BEFORE the rewrite: the fallback reads the OLD docs
+        # table, which is about to be replaced (and may become empty)
+        num_shards = self._num_shards()
         try:
             prev_gen = int(load_stats(self.base).get("tables_gen", 0))
         except FileNotFoundError:
@@ -193,10 +217,7 @@ class IndexMaintenance:
         marker = os.path.join(self.base, "_docs_complete.json")
         if os.path.exists(marker):
             os.remove(marker)
-        from .builder import BuildReport
-
-        report = BuildReport()
-        self.builder._finalize(report, num_shards=num_shards)
+        self.builder._finalize(BuildReport(), num_shards=num_shards)
 
     def _num_shards(self) -> int:
         """The build's shard-hash modulus from stats.json; fallback for
@@ -216,52 +237,37 @@ class IndexMaintenance:
         m = docs.agg(F.max("shard")).collect()[0][0]
         return int(m) + 1 if m is not None else 1
 
-    def _guard_no_delta(self) -> None:
-        from .delta import has_delta
-
-        if has_delta(self.base):
-            raise RuntimeError(
-                "index has pending delta segments: refresh-mode "
-                "maintenance would read only the base tables and drop "
-                "them; run compact_segments() first or use mode='delta'"
-            )
-
     def delete_documents(
         self, document_ids: list[str], mode: str = "refresh"
     ) -> int:
         """T11: remove docs + their postings; empty terms disappear from
         term_stats (the reference's empty-term cleanup,
-        service.go:407-416). ``mode="delta"``: tombstone-only commit --
-        O(deleted docs + vocab) work instead of an O(index) refresh
-        (build/delta.py)."""
-        if mode not in ("refresh", "delta"):
-            # a typo ('Delta', 'incremental') must not silently run the
-            # O(index) refresh on what the caller meant to be an
-            # O(batch + vocab) commit
-            raise ValueError(f"mode must be 'refresh' or 'delta', got {mode!r}")
-        if mode == "delta":
-            return self._delete_delta(document_ids)
-        self._guard_no_delta()
-        from .delta import table_path
+        service.go:407-416). Commits one tombstone-only delta generation
+        -- O(deleted docs + vocab) work (build/delta.py).
+        ``mode="refresh"`` then folds every pending delta with
+        compact_segments(); a delete that matched nothing commits
+        nothing and writes nothing in either mode."""
+        _check_mode(mode)
+        from .delta import next_delta_gen, read_visible_docs
 
-        docs = self.spark.read.parquet(table_path(self.base, "docs"))
-        victims = docs.join(
+        docs = read_visible_docs(self.spark, self.base)
+        old_rows = docs.join(
             self._ids_frame(document_ids), "documentID", "left_semi"
-        ).select("doc_id")
-        n = victims.count()
-        if n == 0:
-            return 0
-        segments = self.spark.read.parquet(table_path(self.base, "segments"))
-        new_docs = docs.join(F.broadcast(victims), "doc_id", "left_anti")
-        new_segments = segments.drop("shard").join(
-            F.broadcast(victims), "doc_id", "left_anti"
-        )
-        self._refresh(new_docs, new_segments)
+        ).persist()
+        try:
+            n = old_rows.count()
+            if n == 0:
+                return 0
+            self._delta_commit(old_rows, None, next_delta_gen(self.base))
+        finally:
+            old_rows.unpersist()
+        if mode == "refresh":
+            self.compact_segments()
         return n
 
     def _normalize_batch(self, new_corpus: DataFrame, id_col: str) -> DataFrame:
         """Rename the id column and derive doc_len + content_sha256 via
-        the builder's shared derivation (both upsert modes MUST match the
+        the builder's shared derivation (an upsert MUST match the
         fresh-build path byte-for-byte: the sha feeds resume fingerprints
         and doc_len feeds BM25 |d|)."""
         from .builder import derive_doc_columns
@@ -289,159 +295,17 @@ class IndexMaintenance:
         - existing documentIDs keep their internal doc_id (the reference
           reuses the internal ID on update, service.go:150-163);
         - new documentIDs get ids above the current maximum (NextID++);
-        - the updated docs' old postings are anti-joined out of the
-          segments, the new flatMap output is unioned in, and
-          stats/term_stats/blocks are recomputed by _refresh -- untouched
-          documents' postings are never re-derived.
+        - the updated docs' previous rows are tombstoned and the batch's
+          docs + postings are appended as one delta generation, with
+          exact vocab-sized df/N/avgdl arithmetic (build/delta.py) --
+          untouched documents' postings are never re-derived.
 
-        Returns {"updated": n, "inserted": n}.
-
-        ``mode="delta"``: LSM/NRT-style incremental commit instead of the
-        full refresh -- appends delta postings/docs + tombstones and
-        rewrites only vocab-sized state with exact df/N/avgdl arithmetic
-        (build/delta.py); results are identical to the refresh path
-        (pinned by tests/test_delta.py); positional operators union the
-        delta rows' position records (query/phrase.py positional_rows).
+        ``mode="delta"`` returns {"updated", "inserted", "gen",
+        "delta_postings", "tombstoned"}. ``mode="refresh"`` runs the same
+        commit, then folds every pending delta with compact_segments(),
+        and returns {"updated", "inserted"}.
         """
-        if mode not in ("refresh", "delta"):
-            raise ValueError(f"mode must be 'refresh' or 'delta', got {mode!r}")
-        if mode == "delta":
-            return self._upsert_delta(new_corpus, id_col)
-        self._guard_no_delta()
-        from .flatmap import POSTINGS_SCHEMA, make_flatmap
-        from .builder import _norm_field
-        from .delta import table_path
-
-        s = self.settings
-        docs = self.spark.read.parquet(table_path(self.base, "docs"))
-        segments = self.spark.read.parquet(table_path(self.base, "segments"))
-        if "shard" in segments.columns:
-            segments = segments.drop("shard")
-
-        self._validate_batch_columns(new_corpus, id_col, docs)
-        nc = self._normalize_batch(new_corpus, id_col)
-
-        # coalesce: an index whose docs were all deleted has max(doc_id)
-        # NULL -- the whole batch is then inserts starting at doc_id 0
-        row = docs.agg(F.max("doc_id")).collect()[0][0]
-        max_id = int(row) if row is not None else -1
-        num_shards = self._num_shards()
-        joined = nc.join(
-            docs.select("documentID", "doc_id"), "documentID", "left"
-        ).persist()
-        # every persist (joined, upserted, the id-range caches) is
-        # released in finally: a failed upsert on a long-lived server
-        # (unresolved passthrough column, disk-full mid-write) must not
-        # pin a corpus-sized cache for the app's lifetime -- the same
-        # discipline as builder.build's try/finally
-        upserted = None
-        id_caches: list[DataFrame] = []
-        try:
-            # ONE validation job for all batch-level counts (same shape as
-            # the delta path's accounting)
-            row = joined.agg(
-                F.count(F.when(F.col("doc_id").isNotNull(), 1)).alias("n_upd"),
-                F.count(F.when(F.col("doc_id").isNull(), 1)).alias("n_ins"),
-                F.countDistinct("documentID").alias("n_dist"),
-            ).collect()[0]
-            n_upd, n_ins = int(row["n_upd"]), int(row["n_ins"])
-            n_distinct = int(row["n_dist"])
-            if n_upd + n_ins != n_distinct:
-                # additive duplicates would double postings / fork insert
-                # ids; the reference's update path is strictly
-                # one-doc-at-a-time
-                raise ValueError(
-                    "upsert batch contains duplicate documentIDs; dedupe it "
-                    "(e.g. dropDuplicates(['documentID'])) before upserting"
-                )
-            # inserts: dense ids appended after the current maximum via the
-            # builder's range-partition + offset composition (build/ids.py)
-            # -- NO single-partition global window, so a bulk insert of
-            # 10^8 new docs parallelizes like a fresh build (the reference
-            # pre-allocates contiguous NextID ranges per batch,
-            # bulk_operations.go:168-202)
-            from .ids import assign_doc_ids
-
-            par = self.spark.sparkContext.defaultParallelism
-            news = assign_doc_ids(
-                joined.filter(F.col("doc_id").isNull()).drop("doc_id"),
-                "documentID",
-                max(1, par),
-                release_into=id_caches,
-            ).withColumn(
-                "doc_id", (F.col("doc_id") + F.lit(max_id + 1)).cast("long")
-            )
-            upserted = (
-                joined.filter(F.col("doc_id").isNotNull())
-                .unionByName(news)
-                .withColumn(
-                    "shard",
-                    F.pmod(F.xxhash64("documentID"), F.lit(num_shards)).cast(
-                        "int"
-                    ),
-                )
-                .select(*docs.columns)
-                .persist()
-            )
-
-            new_docs = docs.join(
-                upserted.select("documentID"), "documentID", "left_anti"
-            ).unionByName(upserted)
-            flat_in = upserted.select(
-                "doc_id",
-                "doc_len",
-                *[
-                    _norm_field(upserted, f).alias(f)
-                    for f in s.searchable_fields
-                ],
-            )
-            new_seg = flat_in.mapInPandas(make_flatmap(s), schema=POSTINGS_SCHEMA)
-            kept = segments.join(
-                upserted.select("doc_id"), "doc_id", "left_anti"
-            )
-            self._refresh(new_docs, kept.unionByName(new_seg), num_shards)
-        finally:
-            joined.unpersist()
-            if upserted is not None:
-                upserted.unpersist()
-            for frame in id_caches:
-                frame.unpersist()
-        return {"updated": int(n_upd), "inserted": int(n_ins)}
-
-    def _validate_batch_columns(
-        self, new_corpus: DataFrame, id_col: str, docs: DataFrame
-    ) -> None:
-        """The docs table is TYPED (unlike the reference's schema-free
-        doc maps): an upsert batch must carry every passthrough column or
-        the final projection dies with an unresolved-column error
-        mid-plan -- validate upfront with an actionable message."""
-        cols = set(new_corpus.columns)
-        if id_col != "documentID":
-            cols = (cols - {id_col}) | {"documentID"}
-        derived = {"doc_id", "doc_len", "content_sha256", "shard"}
-        missing = set(docs.columns) - cols - derived
-        if missing:
-            raise ValueError(
-                "upsert batch lacks columns present in the docs table: "
-                f"{sorted(missing)} (the index schema is fixed at build; "
-                "supply every non-derived column)"
-            )
-
-    # --- delta (LSM/NRT) maintenance: see build/delta.py ------------------
-
-    def _flat_postings(self, rows: DataFrame) -> DataFrame:
-        from .builder import _norm_field
-        from .flatmap import POSTINGS_SCHEMA, make_flatmap
-
-        s = self.settings
-        flat_in = rows.select(
-            "doc_id",
-            "doc_len",
-            *[_norm_field(rows, f).alias(f) for f in s.searchable_fields],
-        )
-        return flat_in.mapInPandas(make_flatmap(s), schema=POSTINGS_SCHEMA)
-
-    def _upsert_delta(self, new_corpus: DataFrame, id_col: str) -> dict:
+        _check_mode(mode)
         from .builder import load_stats
         from .delta import next_delta_gen, read_visible_docs
         from .ids import assign_doc_ids
@@ -471,6 +335,9 @@ class IndexMaintenance:
             ).collect()[0]
             n_upd, n_ins = int(row["n_upd"]), int(row["n_ins"])
             if n_upd + n_ins != int(row["n_dist"]):
+                # additive duplicates would double postings / fork insert
+                # ids; the reference's update path is strictly
+                # one-doc-at-a-time
                 raise ValueError(
                     "upsert batch contains duplicate documentIDs; dedupe it "
                     "(e.g. dropDuplicates(['documentID'])) before upserting"
@@ -487,6 +354,12 @@ class IndexMaintenance:
                 max_id = int(row0) if row0 is not None else -1
             inserts = joined.filter(F.col("doc_id").isNull()).drop("doc_id")
             if n_ins > 0:
+                # dense ids appended after the current maximum via the
+                # builder's range-partition + offset composition
+                # (build/ids.py) -- no single-partition global window, so
+                # a bulk insert parallelizes like a fresh build (the
+                # reference pre-allocates contiguous NextID ranges per
+                # batch, bulk_operations.go:168-202)
                 par = self.spark.sparkContext.defaultParallelism
                 news = assign_doc_ids(
                     inserts, "documentID", max(1, par), release_into=id_caches
@@ -533,8 +406,43 @@ class IndexMaintenance:
                 old_rows.unpersist()
             for frame in id_caches:
                 frame.unpersist()
-        return {"updated": int(n_upd), "inserted": int(n_ins), "gen": gen,
-                **extra}
+        if mode == "refresh":
+            self.compact_segments()
+            return {"updated": n_upd, "inserted": n_ins}
+        return {"updated": n_upd, "inserted": n_ins, "gen": gen, **extra}
+
+    def _validate_batch_columns(
+        self, new_corpus: DataFrame, id_col: str, docs: DataFrame
+    ) -> None:
+        """The docs table is TYPED (unlike the reference's schema-free
+        doc maps): an upsert batch must carry every passthrough column or
+        the final projection dies with an unresolved-column error
+        mid-plan -- validate upfront with an actionable message."""
+        cols = set(new_corpus.columns)
+        if id_col != "documentID":
+            cols = (cols - {id_col}) | {"documentID"}
+        derived = {"doc_id", "doc_len", "content_sha256", "shard"}
+        missing = set(docs.columns) - cols - derived
+        if missing:
+            raise ValueError(
+                "upsert batch lacks columns present in the docs table: "
+                f"{sorted(missing)} (the index schema is fixed at build; "
+                "supply every non-derived column)"
+            )
+
+    # --- the delta (LSM/NRT) commit: see build/delta.py ---------------------
+
+    def _flat_postings(self, rows: DataFrame) -> DataFrame:
+        from .builder import _norm_field
+        from .flatmap import POSTINGS_SCHEMA, make_flatmap
+
+        s = self.settings
+        flat_in = rows.select(
+            "doc_id",
+            "doc_len",
+            *[_norm_field(rows, f).alias(f) for f in s.searchable_fields],
+        )
+        return flat_in.mapInPandas(make_flatmap(s), schema=POSTINGS_SCHEMA)
 
     def _ids_frame(self, document_ids: list[str]) -> DataFrame:
         """Broadcast frame of the target documentIDs for semi/anti joins.
@@ -546,23 +454,6 @@ class IndexMaintenance:
                 [(str(i),) for i in document_ids], "documentID string"
             )
         )
-
-    def _delete_delta(self, document_ids: list[str]) -> int:
-        from .delta import next_delta_gen, read_visible_docs
-
-        docs = read_visible_docs(self.spark, self.base)
-        old_rows = docs.join(
-            self._ids_frame(document_ids), "documentID", "left_semi"
-        ).persist()
-        try:
-            n = old_rows.count()
-            if n == 0:
-                return 0
-            gen = next_delta_gen(self.base)
-            self._delta_commit(old_rows, None, gen)
-        finally:
-            old_rows.unpersist()
-        return n
 
     def _delta_commit(
         self,
@@ -584,8 +475,6 @@ class IndexMaintenance:
         written generation-addressed (``term_stats_gen={gen}``) and made
         visible by the stats.json pointer flip, so no crash window ever
         exposes a missing or ahead-of-stats term_stats."""
-        from pyspark.sql import Observation
-
         from .builder import load_stats
         from .delta import delta_path, term_stats_path
         from .flatmap import POSTINGS_SCHEMA
@@ -610,62 +499,30 @@ class IndexMaintenance:
         try:
 
             # --- delta writes; counts ride them as observed metrics ---------
+            n_rows = F.count(F.lit(1)).alias("n")
+            dl_sum = F.coalesce(F.sum("doc_len"), F.lit(0)).alias("dl")
+            post_path = delta_path(self.base, "postings", f"gen={gen}")
+            tomb_path = delta_path(self.base, "tombstones", f"gen={gen}")
             if new_docs is not None:
-                obs_nf = Observation(f"nf_{uuid.uuid4().hex[:6]}")
-                new_flat.observe(obs_nf, F.count(F.lit(1)).alias("n")).write.mode(
-                    "overwrite"
-                ).parquet(delta_path(self.base, "postings", f"gen={gen}"))
-                obs_nd = Observation(f"nd_{uuid.uuid4().hex[:6]}")
-                new_docs.observe(
-                    obs_nd,
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum("doc_len"), F.lit(0)).alias("dl"),
-                ).write.mode("overwrite").parquet(
-                    delta_path(self.base, "docs", f"gen={gen}")
+                new_post = _write_observed(new_flat, post_path, n_rows)["n"]
+                m = _write_observed(
+                    new_docs, delta_path(self.base, "docs", f"gen={gen}"),
+                    n_rows, dl_sum,
                 )
-                # zero-task writes (an empty upsert batch, or an
-                # AQE-coalesced empty side) never post observed metrics --
-                # same fallback rule as obs_ts/obs_of below
-                try:
-                    new_post = int(obs_nf.get["n"])
-                except Exception:
-                    new_post = new_flat.count()
-                try:
-                    new_n, new_dl = int(obs_nd.get["n"]), int(obs_nd.get["dl"])
-                except Exception:
-                    row = new_docs.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.coalesce(F.sum("doc_len"), F.lit(0)).alias("dl"),
-                    ).collect()[0]
-                    new_n, new_dl = int(row["n"]), int(row["dl"])
+                new_n, new_dl = m["n"], m["dl"]
             else:
-                new_flat.write.mode("overwrite").parquet(
-                    delta_path(self.base, "postings", f"gen={gen}")
-                )
+                new_flat.write.mode("overwrite").parquet(post_path)
                 new_post, new_n, new_dl = 0, 0, 0
             if old_empty:
                 old_rows.select("doc_id").write.mode("overwrite").parquet(
-                    delta_path(self.base, "tombstones", f"gen={gen}")
+                    tomb_path
                 )
                 old_n, old_dl = 0, 0
             else:
-                obs_tomb = Observation(f"tomb_{uuid.uuid4().hex[:6]}")
-                old_rows.observe(
-                    obs_tomb,
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum("doc_len"), F.lit(0)).alias("dl"),
-                ).select("doc_id").write.mode("overwrite").parquet(
-                    delta_path(self.base, "tombstones", f"gen={gen}")
+                m = _write_observed(
+                    old_rows, tomb_path, n_rows, dl_sum, cols=["doc_id"]
                 )
-                try:
-                    old_n, old_dl = int(obs_tomb.get["n"]), int(obs_tomb.get["dl"])
-                except Exception:
-                    # zero-task tombstone write: same fallback as above
-                    row = old_rows.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.coalesce(F.sum("doc_len"), F.lit(0)).alias("dl"),
-                    ).collect()[0]
-                    old_n, old_dl = int(row["n"]), int(row["dl"])
+                old_n, old_dl = m["n"], m["dl"]
 
             n2 = int(stats["N"]) + new_n - old_n
             total_dl = int(
@@ -675,13 +532,10 @@ class IndexMaintenance:
             # exact per-term df arithmetic: docs leaving/joining each term.
             # old_flat's posting count is observed inside the term_stats job
             # (its only consumer) rather than via a standalone count.
-            obs_of = (
-                Observation(f"of_{uuid.uuid4().hex[:6]}")
-                if old_flat is not None else None
-            )
+            obs_of = Observation()
             if old_flat is not None:
                 leave = (
-                    old_flat.observe(obs_of, F.count(F.lit(1)).alias("n"))
+                    old_flat.observe(obs_of, n_rows)
                     .select("term", "doc_id").distinct()
                     .groupBy("term").agg(F.count("*").alias("_leave"))
                 )
@@ -755,25 +609,11 @@ class IndexMaintenance:
             # pointer flip below is what makes it visible (no rmtree+rename
             # window in which term_stats is missing or ahead of stats)
             new_ts_path = os.path.join(self.base, f"term_stats_gen={gen}")
-            obs_ts = Observation(f"ts_{uuid.uuid4().hex[:6]}")
-            new_ts.observe(obs_ts, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(new_ts_path)
-            try:
-                n_terms = int(obs_ts.get["n"])
-            except Exception:
-                # zero-task write (fully emptied vocab) never posts metrics
-                n_terms = spark.read.parquet(new_ts_path).count()
-            if obs_of is not None:
-                try:
-                    old_post = int(obs_of.get["n"])
-                except Exception:
-                    # obs_of rides the same term_stats write job as obs_ts:
-                    # a zero-task write (fully emptied vocab) posts neither
-                    # observation, so fall back the same way
-                    old_post = old_flat.count()
-            else:
-                old_post = 0
+            n_terms = _write_observed(new_ts, new_ts_path, n_rows)["n"]
+            # obs_of rode the term_stats write job
+            old_post = (
+                0 if old_flat is None else _metrics(obs_of, old_flat, n_rows)["n"]
+            )
             stats.update(
                 {
                     "N": n2,
@@ -857,18 +697,17 @@ class IndexMaintenance:
         return True
 
     def compact_segments(self, target_partitions: int | None = None) -> int:
-        """Rewrite the segments table into a bounded number of files.
+        """Fold pending deltas into a fresh base generation and rewrite
+        the segments table into a bounded number of files.
 
-        Every upsert/delete unions or anti-joins rows into segments, so a
-        long-lived index accumulates small files -- the classic
-        small-files degradation (each scan pays per-file open/footer
-        costs). Compaction is the engine's analogue of an LSM/Lucene
-        segment merge: one repartition-by-(term)-rewrite, stats/blocks
-        refreshed from the compacted table. PENDING DELTA state
-        (mode='delta' maintenance) is folded in: visible base + delta
-        postings merge into the new base, tombstoned rows drop, and the
-        _delta directory is removed -- positional operators work again
-        afterwards. Returns the file count after compaction."""
+        Every upsert/delete appends one delta generation (small files, a
+        per-query delta union and visibility filter, and WAND serving the
+        exhaustive plan). Compaction is the engine's analogue of an
+        LSM/Lucene segment merge: visible base + delta postings merge
+        into one repartition-by-(term) rewrite, tombstoned rows drop, and
+        stats/blocks are refreshed from the compacted table -- the
+        pruned WAND tiers serve again afterwards. Returns the file count
+        after compaction."""
         import glob
 
         from .delta import (
@@ -904,11 +743,11 @@ class IndexMaintenance:
         # finalize's blocks job shuffles less
         compacted = segments.repartition(target_partitions, "term")
         self._refresh(docs, compacted)
-        # the folded _delta/ directory is NOT deleted here: stats.json no
-        # longer carries delta_gen (so readers ignore it), and in-flight
-        # readers of the pre-fold generation may still be scanning its
-        # files -- the next maintenance commit's generation GC removes it
-        # (same one-commit grace as the tables_gen roots).
+        # the folded _delta/ generations are NOT deleted here: stats.json
+        # no longer carries delta_gen (so readers ignore them), and
+        # in-flight readers of the pre-fold generation may still be
+        # scanning their files -- the next compaction's generation GC
+        # removes them (same one-commit grace as the tables_gen roots).
         # _refresh's finalize already GC'd superseded generations; count
         # files in the NEW segments dir
         return len(

@@ -1033,11 +1033,12 @@ def _maintained_term_stats(spark, sf_dir, cache, name, mode):
 )
 def maintenance_delete_upsert(spark, sf_dir):
     """T11 + T13 end-to-end against an independent oracle: build an index,
-    delete_documents (anti-join + refresh, reference empty-term cleanup
-    service.go:407-416), upsert_documents (in-place update keeps internal
-    ids, inserts append -- reference indexing/service.go:166-215), then
-    read df/idf from the REFRESHED term_stats. No full rebuild happens;
-    the oracle recomputes statistics over the equivalent corpus."""
+    delete_documents (reference empty-term cleanup service.go:407-416),
+    upsert_documents (in-place update keeps internal ids, inserts append
+    -- reference indexing/service.go:166-215), both in ``mode="refresh"``
+    (delta commit, then compaction), then read df/idf from the COMPACTED
+    term_stats. No full rebuild happens; the oracle recomputes statistics
+    over the equivalent corpus."""
     return _maintained_term_stats(
         spark, sf_dir, _MAINT_CACHE, "maint_idx", "refresh"
     )
@@ -1054,8 +1055,8 @@ def maintenance_delta_upsert(spark, sf_dir):
     """Incremental (LSM/NRT) maintenance against the SAME corpus oracle:
     the identical delete + upsert sequence but through ``mode="delta"``
     (build/delta.py) -- tombstones + delta files + exact vocab-sized
-    stats arithmetic, NO O(index) refresh. The rewritten term_stats must
-    carry the exact post-maintenance df/idf."""
+    stats arithmetic, NO compaction. The rewritten term_stats must carry
+    the exact post-maintenance df/idf."""
     return _maintained_term_stats(
         spark, sf_dir, _DELTA_CACHE, "delta_idx", "delta"
     )

@@ -193,7 +193,7 @@ class SearchEngine:
         from ..build.delta import table_path
 
         # every table resolves through the stats.json pointers
-        # (build/delta.py table_path): refresh-mode maintenance commits
+        # (build/delta.py table_path): compactions and rebuilds commit
         # immutable tables_gen=R directories with one-commit grace, so a
         # query in flight across a concurrent rewrite keeps its complete
         # old-generation files

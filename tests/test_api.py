@@ -251,6 +251,60 @@ def test_warm_and_compact_endpoints(spark, api):
     _call(port, "DELETE", "/indexes/ops")
 
 
+def test_one_document_put_commits_a_delta_without_rewriting(spark, tmp_path):
+    """A one-document PUT on a built index costs O(batch + vocabulary):
+    it lands as one delta generation, creates no tables_gen root and
+    creates or rewrites no block file, and the next search already
+    returns the document."""
+    import glob
+    import os
+
+    from go_search_engine_spark.api.http import EngineServer
+    from go_search_engine_spark.build.delta import table_path
+
+    srv = EngineServer(spark, str(tmp_path))
+    srv.dispatch("POST", "/indexes", {
+        "name": "one", "searchable_fields": ["text"],
+        "fields_without_prefix_search": ["text"],
+    }, {})
+
+    def put(docs):
+        job_id = srv.dispatch(
+            "PUT", "/indexes/one/documents", docs, {})["job_id"]
+        while True:
+            job = srv.dispatch("GET", f"/jobs/{job_id}", None, {})
+            if job["status"] in ("completed", "failed"):
+                return job
+            time.sleep(0.05)
+
+    assert put([
+        {"documentID": f"b{i}", "text": f"baseline words number {i} body"}
+        for i in range(40)
+    ])["status"] == "completed"
+    base = os.path.join(str(tmp_path), "one")
+    blocks_dir = table_path(base, "blocks")
+
+    def block_files():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, files in os.walk(blocks_dir) for f in files
+        }
+
+    roots = glob.glob(os.path.join(base, "tables_gen=*"))
+    blocks = block_files()
+    assert blocks
+
+    job = put([{"documentID": "solo", "text": "qqsolo fresh document"}])
+    assert job["status"] == "completed", job
+    assert job["result"] == {"updated": 0, "inserted": 1}
+    assert glob.glob(os.path.join(base, "tables_gen=*")) == roots
+    assert block_files() == blocks
+    assert glob.glob(os.path.join(base, "_delta", "postings", "gen=*"))
+    res = srv.dispatch("POST", "/indexes/one/search",
+                       {"query": "qqsolo", "typo_tolerance": False}, {})
+    assert [h["documentID"] for h in res["hits"]] == ["solo"]
+
+
 def test_ops_endpoints_and_middleware(api):
     """Round 4 REST parity tail: GET /indexes/{n}/stats, GET
     /indexes/{n}/documents/{id}, GET /analytics, GET /jobs/metrics,

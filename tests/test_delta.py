@@ -1,7 +1,9 @@
-"""Incremental (delta/LSM) maintenance must be RESULT-IDENTICAL to the
-full-refresh path (the strongest oracle available: same upsert/delete
-sequence applied both ways, every query + every stat compared), and
-compaction must fold the deltas back into a plain base index.
+"""Incremental (delta/LSM) maintenance with pending deltas must be
+RESULT-IDENTICAL to the same sequence in refresh mode, where every
+commit is folded by a compaction (the strongest oracle available: same
+upsert/delete sequence applied both ways, every query + every stat
+compared), and compaction must fold the deltas back into a plain base
+index.
 """
 
 from __future__ import annotations
@@ -67,8 +69,9 @@ def _term_stats_map(spark, wh, name):
 
 @pytest.fixture(scope="module")
 def twin(spark, tmp_path_factory):
-    """Two identical indexes; 'ref' takes the refresh path, 'dlt' the
-    delta path, through the same maintenance sequence."""
+    """Two identical indexes; 'ref' takes refresh mode (each commit
+    folded), 'dlt' delta mode (deltas left pending), through the same
+    maintenance sequence."""
     wh = str(tmp_path_factory.mktemp("wh_delta"))
     corpus = generate_corpus(spark, 60, seed=51, words_per_doc=12)
     for name in ("ref", "dlt"):
@@ -102,9 +105,13 @@ def twin(spark, tmp_path_factory):
 
 
 def test_delta_results_identical_to_refresh(spark, twin):
+    from go_search_engine_spark.build.delta import has_delta
+
     wh = twin
-    assert os.path.isdir(f"{wh}/dlt/_delta/postings")
-    assert not os.path.isdir(f"{wh}/ref/_delta")
+    # the committed pointer, not the directory: a compaction keeps the
+    # folded _delta/ dir one commit as reader grace
+    assert has_delta(f"{wh}/dlt")
+    assert not has_delta(f"{wh}/ref")
     assert _search_all(spark, wh, "dlt") == _search_all(spark, wh, "ref")
 
 
@@ -176,9 +183,6 @@ def test_delta_positional_parity_and_guards(spark, twin):
             generate_corpus(spark, 60, seed=51, words_per_doc=12),
             num_shards=2, resume=True,
         )
-    # refresh-mode maintenance on a delta index refuses
-    with pytest.raises(RuntimeError, match="pending delta"):
-        IndexMaintenance(spark, wh, "dlt").delete_documents(["new-a"])
 
 
 def test_delta_warm_identical(spark, twin):
@@ -222,6 +226,25 @@ def test_compaction_folds_deltas(spark, twin):
     assert _key(got) == _key(
         eng.search("tokenizer", k=20).collect()
     )
+
+
+def test_refresh_mode_folds_pending_deltas(spark, twin):
+    """Refresh mode on an index with pending deltas does not refuse: its
+    delta commit joins them and the compaction folds them all. Runs after
+    test_compaction_folds_deltas, so it first leaves one fresh delta
+    pending on 'dlt'; 'ref' takes both deletes in one refresh-mode op."""
+    from go_search_engine_spark.build.delta import has_delta
+
+    wh = twin
+    md = IndexMaintenance(spark, wh, "dlt")
+    mr = IndexMaintenance(spark, wh, "ref")
+    assert md.delete_documents(["new-c"], mode="delta") == 1
+    assert has_delta(f"{wh}/dlt")
+    assert md.delete_documents(["new-a"]) == 1
+    assert not has_delta(f"{wh}/dlt")
+    assert mr.delete_documents(["new-c", "new-a"]) == 2
+    assert _search_all(spark, wh, "dlt") == _search_all(spark, wh, "ref")
+    assert _term_stats_map(spark, wh, "dlt") == _term_stats_map(spark, wh, "ref")
 
 
 def test_delta_live_engine_reload(spark, tmp_path):
@@ -270,9 +293,12 @@ def test_maybe_compact_ratio_policy(spark, tmp_path):
     assert not has_delta(f"{wh}/mc")
     assert _search_all(spark, wh, "mc") == before
     assert m.maybe_compact() is False  # idempotent after folding
-    # the retained grace _delta/ dir is GC'd by the NEXT refresh commit
+    # the folded gens retained as reader grace are GC'd by the NEXT
+    # compaction (here the one a refresh-mode upsert ends with), which in
+    # turn retains only the gen it just folded
+    assert os.path.isdir(f"{wh}/mc/_delta/postings/gen=1")
     m.upsert_documents(_batch(spark, [("mc-post", "post fold doc")]))
-    assert not os.path.isdir(f"{wh}/mc/_delta")
+    assert sorted(os.listdir(f"{wh}/mc/_delta/postings")) == ["gen=3"]
 
 
 def test_uncommitted_delta_gen_is_invisible(spark, tmp_path):

@@ -21,6 +21,11 @@ DOCS = [
     ("p5", "brown fox", "quick"),   # phrase split across fields: no match
     ("p6", "quickBrown camera", "nothing here"),  # camelCase -> quick brown
     ("p7", "noise", "data data data value"),      # duplicate-token phrases
+    # 70 tokens cycling 10 words: room for phrases of >= 64 tokens
+    ("p8", "longform", " ".join(
+        "ember flint grove harbor inlet jetty kelp lagoon marsh nook".split()
+        * 7
+    )),
 ]
 
 
@@ -40,6 +45,23 @@ def engine(spark, tmp_path_factory):
 
 def _hits(df):
     return {r["documentID"]: r["n_occurrences"] for r in df.collect()}
+
+
+def _token_scan(tokens):
+    """Reference answer: occurrences of the token sequence in each
+    field's token list, per document."""
+    from go_search_engine_spark.functions.tokenizer import tokenize
+
+    out = {}
+    for doc, *fields in DOCS:
+        n = sum(
+            toks[i:i + len(tokens)] == tokens
+            for toks in map(tokenize, fields)
+            for i in range(len(toks) - len(tokens) + 1)
+        )
+        if n:
+            out[doc] = n
+    return out
 
 
 def test_adjacency_and_counts(engine):
@@ -77,6 +99,15 @@ def test_duplicate_token_phrase(engine):
     assert _hits(phrase_search(engine, "data data data", k=10)) == {"p7": 1}
     assert _hits(phrase_search(engine, "data value", k=10)) == {"p7": 1}
     assert _hits(phrase_search(engine, "value data", k=10)) == {}
+    # >= 64 tokens: the slot bitmask no longer fits a long and the
+    # count(DISTINCT slot) fallback runs (query/phrase.py)
+    words = DOCS[-1][2].split()
+    assert _token_scan(words[:64]) == {"p8": 1}
+    for tokens in (words[:64], words[3:70], words[:63] + ["ember"]):
+        assert len(tokens) >= 64
+        assert _hits(
+            phrase_search(engine, " ".join(tokens), k=10)
+        ) == _token_scan(tokens)
 
 
 def test_prefix_field_ngrams_are_not_words(engine):
