@@ -488,9 +488,11 @@ class IndexBuilder:
         # corpus partition count: defaults scale with the session's
         # parallelism, but ``spark.graft.build.docPartitions`` pins it --
         # the N-vs-4N scaling bench must present IDENTICAL work to both
-        # legs (task count drives per-task fixed costs: python-worker
-        # round-trips, parquet writer open/commit; measured 0.58 vs
-        # 0.83 ms/doc when one leg ran 4x the tasks of the other), and
+        # legs (task count drives per-task fixed costs: each Python-UDF
+        # task's worker setup -- on Python < 3.12 a re-read of every zip
+        # on the worker's sys.path unless the session forks workers from
+        # worker_daemon -- and parquet writer open/commit; measured 0.58
+        # vs 0.83 ms/doc when one leg ran 4x the tasks of the other), and
         # on a real cluster partitioning is sized to the DATA, not to
         # whichever node count today's job landed on
         par = self.spark.sparkContext.defaultParallelism

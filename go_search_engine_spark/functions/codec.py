@@ -127,3 +127,28 @@ def decode_positions(buf: bytes, n_docs: int) -> list[np.ndarray]:
         out.append(np.cumsum(stream[i : i + cnt], dtype=np.uint64))
         i += cnt
     return out
+
+
+def decode_position_records(
+    data, offsets: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Cells of ``data`` delimited by byte ``offsets`` (the Arrow binary
+    layout), each empty or ONE position record [count, first, deltas...]
+    -> (list offsets, int32 positions). One varint decode over all cells
+    plus a segmented cumsum: no Python object per cell."""
+    b = np.frombuffer(data, dtype=np.uint8)[offsets[0] : offsets[-1]]
+    vals = varint_decode(b).astype(np.int64)
+    # value index at a byte boundary = terminator bytes before it
+    ends = np.concatenate(([0], np.cumsum((b & 0x80) == 0)))
+    first = ends[offsets[:-1] - offsets[0]]
+    full = ends[offsets[1:] - offsets[0]] > first
+    counts = np.zeros(offsets.size - 1, dtype=np.int64)
+    counts[full] = vals[first[full]]
+    keep = np.ones(vals.size, dtype=bool)
+    keep[first[full]] = False
+    cs = np.cumsum(vals[keep])
+    lo = np.concatenate(([0], np.cumsum(counts)))
+    if lo[-1] != cs.size:
+        raise ValueError("corrupt position record: count != stored values")
+    before = np.concatenate(([0], cs))[lo[:-1]]
+    return lo, (cs - np.repeat(before, counts)).astype(np.int32)

@@ -32,10 +32,16 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.codec import decode_positions, delta_decode
+from ..functions.codec import (
+    decode_position_records,
+    decode_positions,
+    delta_decode,
+)
 from ..functions.tokenizer import tokenize
 
 POS_DECODED_SCHEMA = (
@@ -108,25 +114,27 @@ _POS_UDF = None
 
 
 def _decode_pos_record(col):
-    """One varint position record ([count, first, deltas...]) -> int[].
-    Arrow-batched pandas UDF, created lazily (pandas_udf parses its DDL
-    return type against the ACTIVE session, so no module-import-time
-    registration); only ever applied to delta rows (small by design)."""
+    """One varint position record ([count, first, deltas...]) per cell ->
+    int[], null -> []. Arrow UDF over the column's data and offset
+    buffers (``decode_position_records``), created lazily (the DDL return
+    type is parsed against the ACTIVE session, so no module-import-time
+    registration); only ever applied to delta rows."""
     global _POS_UDF
     if _POS_UDF is None:
 
-        @F.pandas_udf("array<int>")
-        def decode_record(bufs: pd.Series) -> pd.Series:
-            def one(b):
-                if b is None:
-                    return []
-                return decode_positions(bytes(b), 1)[0].astype(
-                    "int32"
-                ).tolist()
+        @F.arrow_udf("array<int>")
+        def decode_records(bufs: pa.Array) -> pa.Array:
+            bufs = pc.fill_null(bufs, b"").cast(pa.large_binary())
+            _, offs, data = bufs.buffers()
+            offs = np.frombuffer(offs, dtype=np.int64)[
+                bufs.offset : bufs.offset + len(bufs) + 1
+            ]
+            lo, pos = decode_position_records(data or b"", offs)
+            return pa.ListArray.from_arrays(
+                pa.array(lo, pa.int32()), pa.array(pos)
+            )
 
-            return bufs.map(one)
-
-        _POS_UDF = decode_record
+        _POS_UDF = decode_records
     return _POS_UDF(col)
 
 

@@ -5,6 +5,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from go_search_engine_spark.functions.codec import (
+    decode_position_records,
     decode_positions,
     delta_decode,
     delta_encode,
@@ -49,6 +50,28 @@ def test_positions_roundtrip(plists):
     buf = encode_positions(plists)
     got = decode_positions(buf, len(plists))
     assert [g.tolist() for g in got] == plists
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.none()
+        | st.lists(st.integers(min_value=0, max_value=10000), max_size=30).map(
+            sorted
+        ),
+        max_size=20,
+    )
+)
+def test_position_records_batch_decode(cells):
+    # one record per cell, empty cells (nulls) decode to []: the batch
+    # decoder agrees with a per-cell decode_positions
+    bufs = [b"" if c is None else encode_positions([c]) for c in cells]
+    offsets = np.cumsum([0] + [len(b) for b in bufs])
+    lo, pos = decode_position_records(b"".join(bufs), offsets)
+    assert pos.dtype == np.int32
+    got = [pos[a:b].tolist() for a, b in zip(lo[:-1], lo[1:])]
+    assert got == [decode_positions(b, 1)[0].tolist() if b else [] for b in bufs]
+    assert got == [[] if c is None else c for c in cells]
 
 
 def test_compression_ratio():
