@@ -228,7 +228,7 @@ def cmd_warm150() -> None:
     info = eng.warm(max_postings=5_000_000)
     out["partial_warm_info"] = {k: info[k] for k in
                                ("warm_terms", "warm_postings",
-                                "fraction_in_memory", "sql_template")
+                                "fraction_in_memory")
                                if k in info}
     hot = [q for q in sweep
            if all(eng._is_warm_term(str(t), int(d))

@@ -56,7 +56,10 @@ DECODED_SCHEMA = (
 def decode_blocks_arrow(
     batches: Iterator["pa.RecordBatch"],
 ) -> Iterator["pa.RecordBatch"]:
-    """mapInArrow: block rows -> flat (term, field, doc_id, tf, dl, fw).
+    """mapInArrow: block rows -> flat (term, field, doc_id[, tf, dl], fw
+    [, positions]) -- tf/dl when the input carries the ``tfs``/``dls``
+    streams, positions when it carries ``positions`` (the scoring path
+    projects the former, phrase.positional_rows the latter).
 
     Mirror of the build-side whole-batch Arrow encoder
     (build/blocks.py:_encode_batch). Each binary cell is a
@@ -64,9 +67,7 @@ def decode_blocks_arrow(
     data buffer decodes in ONE vectorized varint_decode call per batch;
     per-block segmentation falls out of the ``n`` column with numpy
     boundary arithmetic, and the term/field strings are replicated with
-    Arrow ``take`` (no Python string objects). Replaces the round-4
-    itertuples loop (per-block-row bytes() copies + pandas concat) that
-    dominated cold query latency.
+    Arrow ``take`` (no Python string objects).
     """
     import pyarrow as pa
 
@@ -76,6 +77,7 @@ def decode_blocks_arrow(
         nb = batch.num_rows
         if nb == 0:
             continue
+        names = batch.schema.names
         col = lambda name: batch.column(batch.schema.get_field_index(name))
         counts = col("n").to_numpy(zero_copy_only=False).astype(np.int64)
         # the current encoder never writes n == 0 rows, but a future
@@ -99,27 +101,66 @@ def decode_blocks_arrow(
         # (cs - base) difference is exact under mod-2^64 arithmetic.
         cs = np.cumsum(deltas, dtype=np.uint64)
         base = np.repeat(cs[vstart] - deltas[vstart], counts)
-        doc_ids = (cs - base).astype(np.int64)
-        tfs = stream("tfs").astype(np.float64)
-        dls = stream("dls").astype(np.int64)
+        rep = pa.array(np.repeat(np.arange(nb, dtype=np.int64), counts))
+        out = {
+            "term": col("term").take(rep),
+            "field": col("field").take(rep),
+            "doc_id": pa.array((cs - base).astype(np.int64), pa.int64()),
+        }
+        if "tfs" in names:
+            out["tf"] = pa.array(stream("tfs").astype(np.float64))
+            out["dl"] = pa.array(stream("dls").astype(np.int64))
         fw_offs, fw_data = _binary_parts(col("fws"))
         bits = np.unpackbits(fw_data[fw_offs[0]:fw_offs[-1]])
         fw_idx = (
             np.repeat((fw_offs[:-1] - fw_offs[0]) * 8, counts) + row_in_block
         )
-        fws = bits[fw_idx].astype(bool)
-        rep = pa.array(np.repeat(np.arange(nb, dtype=np.int64), counts))
-        yield pa.RecordBatch.from_arrays(
-            [
-                col("term").take(rep),
-                col("field").take(rep),
-                pa.array(doc_ids, type=pa.int64()),
-                pa.array(tfs, type=pa.float64()),
-                pa.array(dls, type=pa.int64()),
-                pa.array(fws, type=pa.bool_()),
-            ],
-            names=["term", "field", "doc_id", "tf", "dl", "fw"],
-        )
+        out["fw"] = pa.array(bits[fw_idx].astype(bool), pa.bool_())
+        if "positions" in names:
+            out["positions"] = _block_positions(
+                col("positions"), counts, vstart
+            )
+        yield pa.RecordBatch.from_arrays(list(out.values()), names=list(out))
+
+
+def _block_positions(
+    arr: "pa.Array", counts: np.ndarray, vstart: np.ndarray
+) -> "pa.Array":
+    """Per-posting position lists (list<int32>) of a batch's block
+    ``positions`` cells. A cell holds its block's ``n`` records
+    [count, first, deltas...] back to back (build/flatmap.py), so the
+    whole column decodes with ONE varint_decode over its data buffer;
+    record starts are walked in a loop bounded by the block size,
+    vectorized across blocks, and the positions come out of a segmented
+    cumsum (as in codec.decode_position_records)."""
+    import pyarrow as pa
+
+    from ..build.blocks import _binary_parts
+
+    offs, data = _binary_parts(arr)
+    b = data[offs[0]:offs[-1]]
+    vals = varint_decode(b).astype(np.int64)
+    # value index at a byte boundary = terminator bytes before it
+    ends = np.concatenate(([0], np.cumsum((b & 0x80) == 0)))
+    cell = ends[offs - offs[0]]
+    rec = np.empty(int(counts.sum()), dtype=np.int64)
+    cur = cell[:-1].copy()
+    for j in range(int(counts.max())):
+        live = np.nonzero(counts > j)[0]
+        rec[vstart[live] + j] = cur[live]
+        cur[live] += 1 + vals[cur[live]]
+    if not np.array_equal(cur, cell[1:]):
+        raise ValueError("corrupt position block: records != block n")
+    cnt = vals[rec]
+    keep = np.ones(vals.size, dtype=bool)
+    keep[rec] = False
+    cs = np.cumsum(vals[keep])
+    lo = np.concatenate(([0], np.cumsum(cnt)))
+    before = np.concatenate(([0], cs))[lo[:-1]]
+    pos = (cs - np.repeat(before, cnt)).astype(np.int32)
+    return pa.ListArray.from_arrays(
+        pa.array(lo, pa.int32()), pa.array(pos, pa.int32())
+    )
 
 
 def decode_blocks(blk: DataFrame) -> DataFrame:
@@ -141,20 +182,19 @@ def _esc(s: str) -> str:
 
 
 def _cand_entries(cand: pd.DataFrame) -> str:
-    """The candidate table as one SQL array-of-named_struct literal --
-    shared by the warm Column path (scan_candidates) and the warm SQL
-    template (_warm_sql_topk). repr(float) round-trips exactly."""
+    """The candidate table as one SQL array-of-named_struct literal for
+    the literal candidate attach (SearchEngine.attach_cand): one
+    expression string instead of ~5 py4j round trips per candidate row.
+    repr(float) round-trips exactly."""
     return ",".join(
-        "named_struct('token','%s','cterm','%s','distance',%d,"
+        "named_struct('term','%s','token','%s','distance',%d,"
         "'penalty',CAST(%r AS DOUBLE),'idf',CAST(%r AS DOUBLE))"
-        % (_esc(t), _esc(m), int(d), float(p), float(i))
+        % (_esc(m), _esc(t), int(d), float(p), float(i))
         for t, m, d, p, i in zip(
             cand["token"], cand["term"], cand["distance"],
             cand["penalty"], cand["idf"],
         )
     )
-
-
 
 
 class SearchEngine:
@@ -214,6 +254,13 @@ class SearchEngine:
         self.term_stats = self.spark.read.parquet(
             term_stats_path(self.base, self.stats)
         )
+        if "field_bounds" not in self.term_stats.columns:
+            # per-(term, field) (max_tf, min_dl) bounds: WAND's upper
+            # bound and the warm budget's posting-row estimate read them
+            raise ValueError(
+                f"index at {self.base} predates the term_stats "
+                "field_bounds column; rebuild it with the current builder"
+            )
         # pending delta state (LSM/NRT maintenance, build/delta.py): the
         # docs view is visibility-filtered, candidate scans union the
         # delta postings, WAND serves the exhaustive plan, positional
@@ -253,7 +300,7 @@ class SearchEngine:
 
     def _drop_warm_state(self) -> None:
         """Unpersist and reset ALL warm serving state (decoded postings,
-        slim docs side, membership boundary, SQL template views). Called
+        slim docs side, membership boundary). Called
         on every reload AND at the top of warm() -- re-warming the same
         generation must not leak the previous persisted frames, and a
         re-warm that skips the docs_slim branch must not keep serving
@@ -272,8 +319,6 @@ class SearchEngine:
         self._warm_boundary: tuple[int, str] | None = None
         self._warm_all = False
         self._docs_slim: DataFrame | None = None
-        # cached warm SQL template (warm()); reload drops its temp views
-        self._drop_warm_views()
 
     def _ensure_fresh(self) -> None:
         """Generation check before serving from cached driver state: every
@@ -305,11 +350,10 @@ class SearchEngine:
         if self.stats.get("n_terms", 1 << 62) > self._vocab_cache_max:
             return None
         if self._vocab_pd is None:
-            cols = ["term", "df", "idf", "term_len"]
-            if "field_bounds" in self.term_stats.columns:
-                cols.append("field_bounds")
             self._vocab_pd = (
-                self.term_stats.select(*cols)
+                self.term_stats.select(
+                    "term", "df", "idf", "term_len", "field_bounds"
+                )
                 .toPandas()
                 .sort_values("term", ignore_index=True)
             )
@@ -317,17 +361,14 @@ class SearchEngine:
 
     def term_field_ub(
         self, terms: list[str], fields: list[str]
-    ) -> dict[str, float] | None:
+    ) -> dict[str, float]:
         """Per-term BM25 tf-part upper bound SUMMED over the queried
         fields, from the build-time per-(term, field) (max_tf, min_dl)
         bounds in term_stats -- driver-side, zero jobs when the vocab is
-        cached, one tiny ``term IN`` collect otherwise. None for indexes
-        built before field_bounds existed (callers fall back to the
-        block-metadata job). The per-field SUM is required for soundness:
-        scoring sums tf across fields before BM25 saturation, and
-        sat(tf_a + tf_b) <= bound_a + bound_b (concave, sat(0) = 0)."""
-        if "field_bounds" not in self.term_stats.columns:
-            return None
+        cached, one tiny ``term IN`` collect otherwise. The per-field SUM
+        is required for soundness: scoring sums tf across fields before
+        BM25 saturation, and sat(tf_a + tf_b) <= bound_a + bound_b
+        (concave, sat(0) = 0)."""
         vocab = self._vocab()
         tset = set(terms)
         if vocab is not None:
@@ -650,12 +691,9 @@ class SearchEngine:
                 # number of fields it appears in (a conservative upper
                 # bound -- not every doc matches in every field), not df
                 # alone. Single-field indexes are unchanged.
-                if "field_bounds" in v.columns:
-                    rows_est = v["df"] * v["field_bounds"].map(
-                        lambda fb: max(1, len(fb or {}))
-                    )
-                else:
-                    rows_est = v["df"]
+                rows_est = v["df"] * v["field_bounds"].map(
+                    lambda fb: max(1, len(fb or {}))
+                )
                 cum = rows_est.cumsum()
                 k = int((cum <= max_postings).sum())
                 boundary = (
@@ -742,151 +780,7 @@ class SearchEngine:
         info["cached_partitions"] = parts
         total = mem + disk
         info["fraction_in_memory"] = round(mem / total, 4) if total else 1.0
-        self._build_warm_sql_template()
-        info["sql_template"] = self._warm_sql is not None
         return info
-
-    def _build_warm_sql_template(self) -> None:
-        """Cache a single SQL string for the whole warm top-k pipeline
-        (any warm mode with a persisted docs_slim). The DataFrame path
-        costs ~30 py4j round trips of plan construction PER QUERY (~45%
-        of warm p50 -- measured plan-build 320ms of 749ms total on a
-        degraded-window profile, same ratio idle); the template needs
-        ONE spark.sql() call. The logical plan is identical -- same
-        cached InMemoryRelations via temp views, same expression trees
-        (see score_and_intersect for the semantics and reference
-        citations) -- so Catalyst produces the same one-job physical
-        plan, which tests/test_warm.py pins for both paths. Under a
-        PARTIAL warm (the realistic big-index serving mode) the warm
-        frame holds only the hot-set terms, so search_from_cand routes a
-        query here only when every candidate term is warm (boundary
-        membership is a driver-side O(1) check); queries touching cold
-        terms keep the union path, which needs the decode UDF SQL cannot
-        express."""
-        self._drop_warm_views()
-        if self._warm_decoded is None or self._docs_slim is None:
-            return
-        # uuid view names: two engines warming concurrently (the API
-        # server runs per-index jobs on threads) must never allocate the
-        # same names -- a shared counter read-then-increment races, and a
-        # collision silently cross-wires one engine's cached SQL onto the
-        # other index's frames
-        import uuid
-
-        seq = uuid.uuid4().hex[:12]
-        post_v = f"gse_warm_post_{seq}"
-        docs_v = f"gse_warm_docs_{seq}"
-        self._warm_decoded.createOrReplaceTempView(post_v)
-        self._docs_slim.createOrReplaceTempView(docs_v)
-        # bare decimal literals parse as DECIMAL in Spark SQL (0.75 * dl
-        # would run through decimal arithmetic and drift ~1e-9 from the
-        # Column path's double math) -- emit explicit double casts, the
-        # same form _cand_entries uses; repr round-trips exactly
-        def _dbl(x: float) -> str:
-            return f"CAST('{x!r}' AS DOUBLE)"
-
-        avgdl = _dbl(float(self.stats["avgdl"]))
-        k1, b = _dbl(float(BM25_K1)), _dbl(float(BM25_B))
-        k1p1, one_b = _dbl(float(BM25_K1 + 1.0)), _dbl(float(1.0 - BM25_B))
-        ntf = list(self.settings.no_typo_tolerance_fields)
-        ntf_pred = (
-            " AND (_c.distance = 0 OR field NOT IN (%s))"
-            % ",".join(f"'{_esc(f)}'" for f in ntf)
-            if ntf
-            else ""
-        )
-        self._warm_sql = {
-            "views": (post_v, docs_v),
-            "template": f"""
-WITH matched AS (
-  SELECT term, field, doc_id, tf, dl, fw,
-         _c.token AS token, _c.distance AS distance,
-         _c.penalty AS penalty, _c.idf AS idf
-  FROM (
-    SELECT d.*, explode(filter(array({{cands}}), s -> s.cterm = d.term)) AS _c
-    FROM {post_v} d
-    WHERE d.term IN ({{terms}}) AND d.field IN ({{fields}})
-  )
-  WHERE true{ntf_pred}
-),
-g1 AS (
-  SELECT token, term, distance, penalty, idf, doc_id,
-         sum(tf) AS tf, first(dl) AS dl, max(cast(fw AS int)) AS fw_any
-  FROM matched
-  GROUP BY token, term, distance, penalty, idf, doc_id
-),
-g1c AS (
-  SELECT *,
-         penalty * (idf * tf * {k1p1}
-                    / (tf + {k1} * ({one_b} + {b} * dl / {avgdl}))) AS contrib
-  FROM g1
-),
-g2 AS (
-  SELECT * FROM (
-    SELECT *, min(distance) OVER (PARTITION BY token, doc_id) AS best_d
-    FROM g1c
-  ) WHERE distance = best_d
-),
-g3 AS (
-  SELECT token, doc_id,
-         max(contrib) AS contrib,
-         min(distance) AS dist,
-         max(CASE WHEN distance = 0 AND fw_any = 1 THEN 1 ELSE 0 END)
-           AS exact_w
-  FROM g2 GROUP BY token, doc_id
-),
-scored AS (
-  SELECT doc_id, score, num_typos, number_exact_words FROM (
-    SELECT doc_id,
-           -- g3 rows are unique per (token, doc_id) (its GROUP BY), so
-           -- count(*) IS the distinct-token count; mirrors final_aggs
-           count(*) AS _nt,
-           sum(contrib) AS score,
-           cast(sum(CASE WHEN dist > 0 THEN 1 ELSE 0 END) AS int)
-             AS num_typos,
-           cast(sum(exact_w) AS int) AS number_exact_words
-    FROM g3 GROUP BY doc_id
-  ) WHERE _nt = {{n_tokens}}
-),
-topk AS (
-  SELECT /*+ SHUFFLE_HASH(ds) */
-         s.doc_id, ds.documentID, s.score, s.num_typos,
-         s.number_exact_words
-  FROM scored s JOIN {docs_v} ds ON s.doc_id = ds.doc_id
-  ORDER BY s.score DESC, s.doc_id ASC LIMIT {{k}}
-)
-SELECT row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank,
-       doc_id, documentID, score, num_typos, number_exact_words
-FROM topk
-""",
-        }
-
-    def _drop_warm_views(self) -> None:
-        """Drop this engine's warm temp views (a long-lived server warms
-        once per generation; the catalog must not accumulate two dead
-        views per maintenance commit)."""
-        old = getattr(self, "_warm_sql", None)
-        self._warm_sql = None
-        if old:
-            for v in old["views"]:
-                self.spark.catalog.dropTempView(v)
-
-    def _warm_sql_topk(
-        self, cand: pd.DataFrame, fields: list[str], k: int, n_tokens: int
-    ) -> DataFrame:
-        """One spark.sql() call for the whole warm exhaustive top-k --
-        rank-identical to the DataFrame path (tests/test_warm.py)."""
-        terms = ",".join(
-            f"'{_esc(t)}'" for t in sorted(set(cand["term"]))
-        )
-        sql = self._warm_sql["template"].format(
-            cands=_cand_entries(cand),
-            terms=terms,
-            fields=",".join(f"'{_esc(f)}'" for f in fields),
-            n_tokens=int(n_tokens),
-            k=int(k),
-        )
-        return self.spark.sql(sql)
 
     def _storage_info(self) -> dict[int, tuple[int, int, int]]:
         """Block-manager storage per cached RDD: {rdd_id: (bytes_in_memory,
@@ -933,13 +827,9 @@ FROM topk
         # same posting-row budget unit as the driver path: df x fields
         # present (see warm()); F.size on a NULL map is -1, greatest
         # clamps it
-        if "field_bounds" in self.term_stats.columns:
-            rows_col = (
-                F.col("df")
-                * F.greatest(F.lit(1), F.size("field_bounds"))
-            ).alias("rows_est")
-        else:
-            rows_col = F.col("df").alias("rows_est")
+        rows_col = (
+            F.col("df") * F.greatest(F.lit(1), F.size("field_bounds"))
+        ).alias("rows_est")
         ts = self.term_stats.select("term", "df", rows_col)
         npart = max(1, self.spark.sparkContext.defaultParallelism)
         parted = ts.repartitionByRange(
@@ -1024,32 +914,36 @@ FROM topk
             )
         )
 
-    # literal candidate-attach cap: the explode(filter(array-literal))
+    # literal candidate-attach cap: the inline(filter(array-literal))
     # attach is O(len(cand)) PER DECODED ROW (interpreted higher-order
-    # function), so it only beats the broadcast hash join for small
-    # candidate tables -- exactly the non-typo serving case. Typo-heavy
-    # queries (up to 500 candidates/token) keep the O(1)-per-row join.
+    # function), so on scanned postings it only beats the broadcast hash
+    # join for small candidate tables -- exactly the non-typo case.
+    # Typo-heavy queries (up to 500 candidates/token) keep the
+    # O(1)-per-row join unless the rows come from the warm frame.
     CAND_LITERAL_MAX = 64
 
     def attach_cand(self, decoded: DataFrame, cand: pd.DataFrame) -> DataFrame:
         """Attach candidate meta (token, distance, penalty, idf) to decoded
         postings by term: inner-join semantics (a term matching n (token,
-        term) pairs fans out n times, no match -> dropped). Small candidate
-        tables are injected as an array literal + explode(filter(...)) --
-        no per-query BroadcastExchange sub-job, no driver->JVM
-        createDataFrame (the warm path's trick, shared with the cold and
-        WAND paths); larger ones fall back to the broadcast join."""
-        if not len(cand) or len(cand) > self.CAND_LITERAL_MAX:
+        term) pairs fans out n times, no match -> dropped). The candidate
+        table is injected as an array literal + inline(filter(...)) -- no
+        per-query BroadcastExchange sub-job, no driver->JVM
+        createDataFrame -- when it has at most CAND_LITERAL_MAX rows, or
+        in warm serving mode, where the postings are an in-memory frame
+        and the broadcast job would be most of the query; otherwise the
+        broadcast join. An empty table takes the join form (an empty
+        array literal fails analysis)."""
+        if not len(cand) or (
+            len(cand) > self.CAND_LITERAL_MAX and self._warm_decoded is None
+        ):
             return decoded.join(self.cand_frame(cand), "term")
-        entries = _cand_entries(cand)
-        matches = F.expr(f"filter(array({entries}), s -> s.cterm = term)")
-        out = decoded.select("*", F.explode(matches).alias("_c"))
-        return out.select(
-            *decoded.columns,
-            F.col("_c.token").alias("token"),
-            F.col("_c.distance").alias("distance"),
-            F.col("_c.penalty").alias("penalty"),
-            F.col("_c.idf").alias("idf"),
+        # the struct's ``term`` replaces the posting's: ONE select
+        return decoded.select(
+            "field", "doc_id", "tf", "dl", "fw",
+            F.expr(
+                f"inline(filter(array({_cand_entries(cand)}), "
+                "s -> s.term = term))"
+            ),
         )
 
     def scan_candidates(
@@ -1104,43 +998,15 @@ FROM topk
             decoded = apply_visibility(
                 base.unionByName(dp), "gen", self._tomb
             ).drop("gen")
-        if self._warm_decoded is not None and len(cand):
-            # serving mode (and at least one candidate: an EMPTY array
-            # literal fails analysis -- the join form below returns the
-            # empty frame the cold path returns for the same input):
-            # the candidate meta is injected as an ARRAY
-            # LITERAL + explode(filter(...)) instead of a broadcast join --
-            # identical inner-join semantics (a term matching n (token,
-            # term) pairs fans out n times, no match -> dropped), but no
-            # per-query BroadcastExchange job and no driver->JVM
-            # createDataFrame. Built as ONE SQL expression string: a
-            # python-side array-of-struct literal costs ~5 py4j round
-            # trips PER candidate row, which dominated warm p50. Terms
-            # are tokenizer output ([a-z0-9]+ and prefixes), safe to
-            # embed; repr(float) round-trips exactly.
-            entries = _cand_entries(cand)
-            matches = F.expr(
-                f"filter(array({entries}), s -> s.cterm = term)"
-            )
-            return (
-                decoded.select("*", F.explode(matches).alias("_c"))
-                .select(
-                    "term", "field", "doc_id", "tf", "dl", "fw",
-                    F.col("_c.token").alias("token"),
-                    F.col("_c.distance").alias("distance"),
-                    F.col("_c.penalty").alias("penalty"),
-                    F.col("_c.idf").alias("idf"),
-                )
-            )
-        # cold path: repartition by doc_id BEFORE the candidate attach --
-        # the attach's interpreted filter(array)/explode would otherwise
-        # run inside the decode stage's few scan splits (near-serial),
-        # and the attach is narrow so the partitioning survives it,
-        # leaving the whole downstream score pipeline exchange-free
-        # (every clustering key set there contains doc_id)
-        decoded = decoded.repartition(F.col("doc_id"))
-        # literal attach for small candidate tables (no per-query
-        # BroadcastExchange), broadcast join above the cap
+        if self._warm_decoded is None:
+            # cold path: repartition by doc_id BEFORE the candidate
+            # attach -- the attach's interpreted filter(array) would
+            # otherwise run inside the decode stage's few scan splits
+            # (near-serial), and the attach is narrow so the partitioning
+            # survives it, leaving the whole downstream score pipeline
+            # exchange-free (every clustering key set there contains
+            # doc_id). The warm frame is persisted doc_id-partitioned.
+            decoded = decoded.repartition(F.col("doc_id"))
         return self.attach_cand(decoded, cand)
 
     # ------------------------------------------------------------------
@@ -1181,25 +1047,11 @@ FROM topk
         self, cand: pd.DataFrame, fields: list[str], k: int, n_tokens: int
     ) -> DataFrame:
         """Exhaustive scoring plan from a prepared candidate table (shared
-        by search() and the WAND fallback path). In full warm mode the
-        whole pipeline is one cached-SQL call (_warm_sql_topk) instead
-        of ~30 py4j plan-construction round trips -- same logical plan,
-        same single job, rank-identical (tests/test_warm.py)."""
-        if (
-            self._warm_sql is not None
-            and len(cand)
-            and (
-                self._warm_all
-                or all(
-                    self._is_warm_term(str(t), int(d))
-                    for t, d in zip(cand["term"], cand["df"])
-                )
-            )
-        ):
-            return self._warm_sql_topk(cand, fields, k, n_tokens)
-        # cold mode arrives doc_id-partitioned from scan_candidates (one
-        # exchange satisfying the whole score pipeline); warm mode from
-        # its persisted partitioning -- neither needs an exchange here
+        by search() and the WAND exhaustive tiers): scan_candidates ->
+        score_and_intersect -> finish_topk, warm or cold. Cold mode
+        arrives doc_id-partitioned from scan_candidates (one exchange
+        satisfying the whole score pipeline), warm mode from its
+        persisted partitioning -- neither needs an exchange here."""
         matched = self.scan_candidates(cand, fields)
         scored = self.score_and_intersect(matched, n_tokens=n_tokens)
         return self.finish_topk(scored, k)
@@ -1211,9 +1063,8 @@ FROM topk
             # otherwise pick: both sides are already HashPartitioning
             # (doc_id, N), so the hinted join inserts NO exchange and
             # spares the per-query BroadcastExchange job
-            docs_slim = self._docs_slim.hint("shuffle_hash")
             out = (
-                scored.join(docs_slim, "doc_id")
+                scored.join(self._docs_slim.hint("shuffle_hash"), "doc_id")
                 .orderBy(*ex["order"])
                 .limit(k)
             )
@@ -1229,10 +1080,8 @@ FROM topk
             out = F.broadcast(topk).join(
                 self.docs.select("doc_id", "documentID"), "doc_id"
             )
-        return out.withColumn(
-            "rank", F.row_number().over(ex["rank_w"])
-        ).select(
-            "rank",
+        return out.select(
+            F.row_number().over(ex["rank_w"]).alias("rank"),
             "doc_id",
             "documentID",
             "score",
@@ -1250,20 +1099,20 @@ FROM topk
         if self._expr_cache is not None:
             return self._expr_cache
         avgdl = float(self.stats["avgdl"])
+        # doc-level tf per candidate term: sum over allowed fields (dl is
+        # per doc, so any entry's); penalty and idf are grouping keys of
+        # the aggregation this runs in
+        tf, dl = F.sum("tf"), F.first("dl")
         bm25 = (
             F.col("idf")
-            * F.col("tf")
+            * tf
             * F.lit(BM25_K1 + 1.0)
             / (
-                F.col("tf")
+                tf
                 + F.lit(BM25_K1)
-                * (
-                    F.lit(1.0 - BM25_B)
-                    + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl)
-                )
+                * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * dl / F.lit(avgdl))
             )
         )
-        w = Window.partitionBy("token", "doc_id")
         ntf = list(self.settings.no_typo_tolerance_fields)
         self._expr_cache = {
             "ntf_keep": (
@@ -1272,12 +1121,13 @@ FROM topk
                 else None
             ),
             "g1_aggs": [
-                F.sum("tf").alias("tf"),
-                F.first("dl").alias("dl"),
+                (F.col("penalty") * bm25).alias("contrib"),
+                # the term occurs as a full word in >= 1 allowed field
                 F.max(F.col("fw").cast("int")).alias("fw_any"),
             ],
-            "contrib": F.col("penalty") * bm25,
-            "best_d": F.min("distance").over(w),
+            "best_d": F.min("distance")
+            .over(Window.partitionBy("token", "doc_id"))
+            .alias("best_d"),
             "best_keep": F.col("distance") == F.col("best_d"),
             "g3_aggs": [
                 F.max("contrib").alias("contrib"),
@@ -1294,9 +1144,7 @@ FROM topk
                 # (token, doc) BY CONSTRUCTION, so a plain count IS the
                 # distinct-token count. countDistinct would plan an
                 # extra partial-dedup aggregation level over the g3
-                # frame on every query (cold, WAND phases, typo); the
-                # warm SQL template mirrors this (count(*)), which the
-                # bit-exact template-vs-DataFrame tests pin.
+                # frame on every query (cold, warm, WAND phases, typo).
                 F.count(F.lit(1)).alias("_nt"),
                 F.sum("contrib").alias("score"),
                 F.sum(F.when(F.col("dist") > 0, 1).otherwise(0))
@@ -1316,25 +1164,28 @@ FROM topk
         exact term occurs as a FULL word in some allowed field of the doc
         (reference service.go:443-509 -- the is_full_word flag the
         reference declares but never writes is populated at build here).
+        The ONE BM25 scoring definition: cold, warm, multi-search and
+        every WAND phase score through it.
 
         ``no_typo_tolerance_fields``: typo-matched entries in these fields
         are dropped -- only exact matches count there. The reference
         DECLARES this setting (config/settings.go:39: "Fields for which
         typo tolerance is disabled (only exact matches)") but its search
         path never reads it; this engine implements the documented
-        semantics (the pure-Python oracle mirrors it)."""
+        semantics (the pure-Python oracle mirrors it).
+
+        Each DataFrame call is one eager analysis round trip, so the
+        pipeline uses as few as it can: the penalized BM25 contribution
+        is computed inside the (token, term, doc) aggregation."""
         ex = self._exprs()
         if ex["ntf_keep"] is not None:
             matched = matched.filter(ex["ntf_keep"])
-        # doc-level tf per candidate term: sum over allowed fields;
-        # fw_any: the term occurs as a full word in >= 1 allowed field
         g1 = matched.groupBy(
             "token", "term", "distance", "penalty", "idf", "doc_id"
         ).agg(*ex["g1_aggs"])
-        g1 = g1.withColumn("contrib", ex["contrib"])
         # exact-skip + best-distance-wins (service.go:234-257): keep only
         # entries at the minimum distance per (token, doc)
-        g2 = g1.withColumn("best_d", ex["best_d"]).filter(ex["best_keep"])
+        g2 = g1.select("*", ex["best_d"]).filter(ex["best_keep"])
         # exact full-word match per token: distance-0 rows only ever
         # survive the best-distance filter when they exist (g3_aggs)
         g3 = g2.groupBy("token", "doc_id").agg(*ex["g3_aggs"])
@@ -1355,16 +1206,12 @@ FROM topk
         per (token, doc), and the 'term(typo)' display column."""
         if doc_ids is not None:
             matched = matched.filter(F.col("doc_id").isin(list(doc_ids)))
-        ntf = list(self.settings.no_typo_tolerance_fields)
-        if ntf:
-            # same per-field typo exclusion as score_and_intersect
-            matched = matched.filter(
-                (F.col("distance") == 0) | ~F.col("field").isin(ntf)
-            )
-        w = Window.partitionBy("token", "doc_id")
-        best = matched.withColumn("best_d", F.min("distance").over(w)).filter(
-            F.col("distance") == F.col("best_d")
-        )
+        # the same per-field typo exclusion and best-distance filter as
+        # score_and_intersect
+        ex = self._exprs()
+        if ex["ntf_keep"] is not None:
+            matched = matched.filter(ex["ntf_keep"])
+        best = matched.select("*", ex["best_d"]).filter(ex["best_keep"])
         return best.withColumn(
             "display",
             F.when(F.col("distance") == 0, F.col("term")).otherwise(

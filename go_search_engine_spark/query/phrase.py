@@ -28,8 +28,6 @@ self-join per adjacent pair, no window over the token stream.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -37,44 +35,13 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.codec import (
-    decode_position_records,
-    decode_positions,
-    delta_decode,
-)
+from ..functions.codec import decode_position_records
 from ..functions.tokenizer import tokenize
+from . import engine as _engine_mod
 
 POS_DECODED_SCHEMA = (
     "term string, field string, doc_id long, fw boolean, positions array<int>"
 )
-
-
-def decode_blocks_pos_fn(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas: block rows -> (term, field, doc_id, fw, positions)."""
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        frames = []
-        for rec in pdf.itertuples():
-            ids = delta_decode(bytes(rec.doc_ids)).astype(np.int64)
-            pos = decode_positions(bytes(rec.positions), len(ids))
-            fw = np.unpackbits(
-                np.frombuffer(bytes(rec.fws), dtype=np.uint8)
-            )[: len(ids)].astype(bool)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "term": rec.term,
-                        "field": rec.field,
-                        "doc_id": ids,
-                        "fw": fw,
-                        "positions": [p.astype("int32").tolist() for p in pos],
-                    }
-                )
-            )
-        yield pd.concat(frames, ignore_index=True)
 
 
 def positional_rows(engine, cand: pd.DataFrame, fields: list[str]) -> DataFrame:
@@ -84,10 +51,13 @@ def positional_rows(engine, cand: pd.DataFrame, fields: list[str]) -> DataFrame:
     postings carry the same varint position records, build/flatmap.py),
     so positional operators work under NRT deltas (round-4 VERDICT #4;
     previously correct-by-refusal)."""
-    blk = engine.candidate_blocks(cand, fields).select(
-        "term", "field", "doc_ids", "positions", "fws"
+    # the scoring decoder, fed the positions stream instead of tfs/dls
+    # (module attribute lookup at call time keeps it monkeypatchable)
+    decoded = (
+        engine.candidate_blocks(cand, fields)
+        .select("term", "field", "n", "doc_ids", "fws", "positions")
+        .mapInArrow(_engine_mod.decode_blocks_arrow, schema=POS_DECODED_SCHEMA)
     )
-    decoded = blk.mapInPandas(decode_blocks_pos_fn, schema=POS_DECODED_SCHEMA)
     if engine._delta:
         from ..build.delta import apply_visibility
 

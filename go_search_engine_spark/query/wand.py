@@ -62,12 +62,7 @@ from operator import or_
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import (
-    BM25_B,
-    BM25_K1,
-    WAND_MIN_POSTINGS,
-    WAND_SINGLE_PHASE_MAX_RARE,
-)
+from ..config import WAND_MIN_POSTINGS, WAND_SINGLE_PHASE_MAX_RARE
 from ..functions.tokenizer import tokenize
 from .engine import decode_blocks
 
@@ -231,9 +226,11 @@ def wand_topk(
     # exact per-doc contribution of the rare token (full entry set present)
     rare_contrib = (
         engine.score_and_intersect(rare_matched, n_tokens=1)
-        .withColumnRenamed("score", "rare_score")
-        .withColumnRenamed("num_typos", "rare_typos")
-        .withColumnRenamed("number_exact_words", "rare_exw")
+        .withColumnsRenamed({
+            "score": "rare_score",
+            "num_typos": "rare_typos",
+            "number_exact_words": "rare_exw",
+        })
     ).persist()
     persisted.append(rare_contrib)
 
@@ -270,8 +267,36 @@ def wand_topk(
         else None
     )
 
+    def score_with_rare(surv: DataFrame, rare_side: DataFrame) -> DataFrame:
+        """The one combine: the other tokens' postings ``surv`` (already
+        restricted to the rare docs) scored through score_and_intersect,
+        then added to the rare side's exact contribution per doc.
+        Shuffle the survivors by doc_id, THEN run the interpreted
+        candidate attach at full parallelism -- the attach commutes with
+        the doc restriction (it joins on term), and the doc_id
+        partitioning survives it into score_and_intersect (one exchange
+        total)."""
+        other_matched = engine.attach_cand(
+            surv.repartition(F.col("doc_id")), cand_other_pd
+        )
+        other = engine.score_and_intersect(
+            other_matched, n_tokens=len(tokens) - 1
+        )
+        return rare_side.join(other, "doc_id").select(
+            "doc_id",
+            (F.col("rare_score") + F.col("score")).alias("score"),
+            (F.col("rare_typos") + F.col("num_typos"))
+            .cast("int")
+            .alias("num_typos"),
+            (F.col("rare_exw") + F.col("number_exact_words"))
+            .cast("int")
+            .alias("number_exact_words"),
+        )
+
     def exact_scores(rare_docs: DataFrame) -> DataFrame:
-        """Full exact AND scores restricted to the given rare docs."""
+        """Full exact AND scores restricted to the given rare docs: the
+        other tokens' blocks overlapping the docs' chunks, decoded and
+        semi-joined against the (broadcast) doc frame."""
         rare_docs = rare_docs.persist()
         persisted.append(rare_docs)
         if chunk_prune:
@@ -285,36 +310,12 @@ def wand_topk(
             )
         else:
             oblk = other_blk_all
-        other_decoded = decode_blocks(oblk)
-        # order: cheap doc semi-join first (an O(1)-per-row broadcast
-        # probe, fine inside the decode stage's few splits), THEN shuffle
-        # only the survivors by doc_id, THEN the interpreted candidate
-        # attach at full parallelism -- the attach commutes with the doc
-        # filter (it joins on term), and the doc_id partitioning survives
-        # it into score_and_intersect (one exchange total)
-        surv = other_decoded.join(
+        # cheap doc semi-join first: an O(1)-per-row broadcast probe,
+        # fine inside the decode stage's few splits
+        surv = decode_blocks(oblk).join(
             F.broadcast(rare_docs.select("doc_id")), "doc_id", "left_semi"
-        ).repartition(F.col("doc_id"))
-        other_matched = engine.attach_cand(surv, cand_other_pd)
-        other_scored = (
-            engine.score_and_intersect(other_matched, n_tokens=len(tokens) - 1)
-            .withColumnRenamed("score", "other_score")
-            .withColumnRenamed("num_typos", "other_typos")
-            .withColumnRenamed("number_exact_words", "other_exw")
         )
-        return (
-            rare_docs.join(other_scored, "doc_id")
-            .select(
-                "doc_id",
-                (F.col("rare_score") + F.col("other_score")).alias("score"),
-                (F.col("rare_typos") + F.col("other_typos"))
-                .cast("int")
-                .alias("num_typos"),
-                (F.col("rare_exw") + F.col("other_exw"))
-                .cast("int")
-                .alias("number_exact_words"),
-            )
-        )
+        return score_with_rare(surv, rare_docs)
 
     if mode == "anchored":
         # single-phase: every rare-anchored doc scored exactly in ONE
@@ -334,50 +335,14 @@ def wand_topk(
     # build-time per-(term, field) (max_tf, min_dl) bounds in term_stats,
     # SUMMED over fields (soundness on multi-field indexes: doc tf is
     # field-summed before saturation). engine.term_field_ub is a
-    # driver-side lookup (zero jobs); fallback for pre-field_bounds
-    # indexes: one job over candidate block metadata.
-    avgdl = float(engine.stats["avgdl"])
+    # driver-side lookup (zero jobs when the vocabulary is cached).
     tub = engine.term_field_ub(other_terms, fields)
-    if tub is not None:
-        tok_ub: dict[str, float] = {}
-        other_cand = cand[cand["token"] != rare]
-        for r in other_cand.itertuples():
-            if r.term in tub:
-                v = float(r.penalty) * float(r.idf) * tub[r.term]
-                if v > tok_ub.get(r.token, -1.0):
-                    tok_ub[r.token] = v
-    else:
-        block_ub_tf = (
-            F.col("max_tf")
-            * F.lit(BM25_K1 + 1.0)
-            / (
-                F.col("max_tf")
-                + F.lit(BM25_K1)
-                * (
-                    F.lit(1.0 - BM25_B)
-                    + F.lit(BM25_B) * F.col("min_dl") / F.lit(avgdl)
-                )
-            )
-        )
-        per_field = (
-            blk.filter(F.col("term").isin(other_terms))
-            .groupBy("term", "field")
-            .agg(F.max(block_ub_tf).alias("fub"))
-        )
-        per_term = per_field.groupBy("term").agg(F.sum("fub").alias("tub"))
-        ub_rows = (
-            per_term.join(
-                engine.cand_frame(cand_other_pd)
-                .select("term", "token", "penalty", "idf"),
-                "term",
-            )
-            .groupBy("token")
-            .agg(
-                F.max(F.col("penalty") * F.col("idf") * F.col("tub")).alias("ub")
-            )
-            .collect()
-        )
-        tok_ub = {r["token"]: float(r["ub"]) for r in ub_rows}
+    tok_ub: dict[str, float] = {}
+    for r in cand_other_pd.itertuples():
+        if r.term in tub:
+            v = float(r.penalty) * float(r.idf) * tub[r.term]
+            if v > tok_ub.get(r.token, -1.0):
+                tok_ub[r.token] = v
     if len(tok_ub) < len(tokens) - 1:
         rare_contrib.unpersist()
         return engine._empty_result()  # a non-rare token has no blocks
@@ -389,26 +354,15 @@ def wand_topk(
         (no explode, no dedup), the doc restriction a literal IN, and the
         seed's rare contributions a driver-local relation -- ZERO
         broadcast-exchange sub-jobs, vs two per exact_scores call. Same
-        arithmetic, same join semantics, rank-identical
-        (tests/test_wand.py)."""
+        combine (score_with_rare), rank-identical (tests/test_wand.py)."""
         ids = [int(r["doc_id"]) for r in seed_rows]
         chunks = sorted({i >> CHUNK_SHIFT for i in ids})
         fs = F.shiftright(F.col("first_doc"), CHUNK_SHIFT)
         ls = F.shiftright(F.col("last_doc"), CHUNK_SHIFT)
         pred = reduce(or_, [(fs <= F.lit(c)) & (F.lit(c) <= ls)
                             for c in chunks])
-        # same ordering as exact_scores: cheap literal doc filter in the
-        # decode stage, shuffle survivors, attach at full parallelism
-        other_decoded = decode_blocks(other_blk_all.filter(pred))
-        surv = other_decoded.filter(F.col("doc_id").isin(ids)).repartition(
-            F.col("doc_id")
-        )
-        other_matched = engine.attach_cand(surv, cand_other_pd)
-        other_scored = (
-            engine.score_and_intersect(other_matched, n_tokens=len(tokens) - 1)
-            .withColumnRenamed("score", "other_score")
-            .withColumnRenamed("num_typos", "other_typos")
-            .withColumnRenamed("number_exact_words", "other_exw")
+        surv = decode_blocks(other_blk_all.filter(pred)).filter(
+            F.col("doc_id").isin(ids)
         )
         seed_df = engine.spark.createDataFrame(
             [
@@ -419,16 +373,7 @@ def wand_topk(
             schema="doc_id long, rare_score double, rare_typos int, "
             "rare_exw int",
         )
-        return F.broadcast(seed_df).join(other_scored, "doc_id").select(
-            "doc_id",
-            (F.col("rare_score") + F.col("other_score")).alias("score"),
-            (F.col("rare_typos") + F.col("other_typos"))
-            .cast("int")
-            .alias("num_typos"),
-            (F.col("rare_exw") + F.col("other_exw"))
-            .cast("int")
-            .alias("number_exact_words"),
-        )
+        return score_with_rare(surv, F.broadcast(seed_df))
 
     if 4 * k <= LITERAL_SEED_MAX:
         # ---- bounded-seed two-phase (the serving case, k ~ 10): seed and

@@ -170,3 +170,74 @@ def test_encoder_to_arrow_decoder_roundtrip():
     assert decoded_rows(enc.slice(1)) == want[counts[0]:]
     # empty batch yields nothing
     assert decoded_rows(enc.slice(0, 0)) == []
+
+
+_POSTING = st.tuples(
+    st.integers(min_value=1, max_value=2**40),  # doc-id gap
+    st.lists(st.integers(min_value=0, max_value=300), max_size=6),
+    st.booleans(),
+)
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(["alpha", "beta"]),
+            st.sampled_from(["content", "title"]),
+            st.lists(_POSTING, min_size=1, max_size=30),
+        ),
+        min_size=1, max_size=4,
+        unique_by=lambda g: (g[0], g[1]),
+    ),
+    st.integers(min_value=1, max_value=9),
+    st.integers(min_value=0, max_value=2),
+)
+def test_arrow_decoder_positions_match_reference(groups, block_size, skip):
+    """The positions stream of the whole-batch Arrow decoder
+    (query/engine.decode_blocks_arrow, as phrase.positional_rows feeds
+    it) equals the per-row reference decoder (build/blocks.decode_block)
+    on encoder output: empty position lists, multi-byte values, blocks of
+    1..9 postings, and a sliced batch (nonzero Arrow offset)."""
+    import pyarrow as pa
+
+    from go_search_engine_spark.build.blocks import _encode_batch, decode_block
+    from go_search_engine_spark.query.engine import decode_blocks_arrow
+
+    rows = []
+    for term, field, postings in sorted(groups):
+        doc = 0
+        for gap, pos, fw in postings:
+            doc += gap
+            rows.append((term, field, doc, sorted(set(pos)), fw))
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array([r[0] for r in rows], type=pa.string()),
+            pa.array([r[1] for r in rows], type=pa.string()),
+            pa.array([0] * len(rows), type=pa.int32()),
+            pa.array([r[2] for r in rows], type=pa.int64()),
+            pa.array([float(len(r[3]) or 1) for r in rows]),
+            pa.array([7] * len(rows), type=pa.int64()),
+            pa.array([0] * len(rows), type=pa.int32()),
+            pa.array([encode_positions([r[3]]) for r in rows],
+                     type=pa.binary()),
+            pa.array([r[4] for r in rows], type=pa.bool_()),
+        ],
+        names=["term", "field", "salt", "doc_id", "tf", "dl", "bucket",
+               "positions", "is_full_word"],
+    )
+    enc = _encode_batch(batch, block_size=block_size)
+    enc = enc.slice(min(skip, enc.num_rows - 1))
+    want = []
+    for blk in enc.to_pylist():
+        ref = decode_block(blk)
+        want += list(zip(ref["term"], ref["field"], ref["doc_id"],
+                         ref["is_full_word"], ref["positions"]))
+    proj = enc.select(["term", "field", "n", "doc_ids", "fws", "positions"])
+    got = []
+    for d in decode_blocks_arrow(iter([proj])):
+        assert d.schema.names == ["term", "field", "doc_id", "fw", "positions"]
+        t = d.to_pydict()
+        got += list(zip(t["term"], t["field"], t["doc_id"], t["fw"],
+                        t["positions"]))
+    assert got == [(a, b, int(c), bool(e), list(p)) for a, b, c, e, p in want]

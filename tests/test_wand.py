@@ -169,40 +169,6 @@ def test_wand_anchored_vs_two_phase_identical(engine, monkeypatch):
     _same(got, engine.search("blockMaxWand func", k=10).collect())
 
 
-def test_wand_block_metadata_fallback_rank_identical(spark, engine, tmp_path):
-    """The tub-is-None fallback (upper bounds from candidate BLOCK
-    metadata instead of term_stats field_bounds) is unreachable for any
-    index the current builder writes -- exercise it by stripping the
-    field_bounds column from a COPY of term_stats and pin rank identity,
-    so the fallback can't rot silently (pre-field_bounds indexes still
-    open)."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    src = engine.base
-    dst = str(tmp_path / "wand_nofb")
-    shutil.copytree(src, dst)
-    ts = spark.read.parquet(f"{src}/term_stats").drop("field_bounds")
-    ts.write.mode("overwrite").parquet(f"{dst}/term_stats")
-
-    wh, name = str(tmp_path), "wand_nofb"
-    legacy = SearchEngine(spark, wh, name)
-    assert "field_bounds" not in legacy.term_stats.columns
-    assert legacy.term_field_ub(["func"], ["content"]) is None  # fallback armed
-
-    for query, k, typos in [
-        ("blockMaxWand func", 10, True),
-        ("deltaEncode varintDecode", 10, True),
-        ("func the", 20, False),
-    ]:
-        exhaustive = legacy.search(query, k=k, typo_tolerance=typos).collect()
-        pruned = wand_topk(
-            legacy, query, k=k, typo_tolerance=typos, prune=True
-        ).collect()
-        _same(pruned, exhaustive)
-
-
 # --- property-based sweep: forced 2-phase WAND vs exhaustive ---
 
 from hypothesis import HealthCheck, given  # noqa: E402

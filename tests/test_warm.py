@@ -100,17 +100,14 @@ def test_warm_partial_budget_unions_cold_terms(spark, warm_idx):
     assert not re.search(r"term#\d+ IN \(", plan)
 
 
-def test_warm_partial_sql_template_one_job(spark, warm_idx):
+def test_warm_partial_one_job(spark, warm_idx):
     """Partial warm (the realistic big-index serving mode): a query whose
-    candidate terms are ALL inside the warm hot-set is served by the
-    cached SQL template -- ONE spark.sql call, one Spark job,
-    rank-identical to cold. (Round 4 left partial warm on the
-    ~30-round-trip per-query DataFrame plan-construction path.)"""
+    candidate terms are ALL inside the warm hot-set runs as ONE Spark
+    job, rank-identical to cold."""
     cold = SearchEngine(spark, warm_idx, "w")
     eng = SearchEngine(spark, warm_idx, "w")
     info = eng.warm(max_postings=200)
     assert info["warm_terms"] != "all"
-    assert info["sql_template"] is True
     v = eng._vocab().sort_values(["df", "term"], ascending=[False, True])
     hot = str(v["term"].iloc[0])
     assert eng._is_warm_term(hot, int(v["df"].iloc[0]))
@@ -126,8 +123,8 @@ def test_warm_partial_sql_template_one_job(spark, warm_idx):
         sc.setJobGroup(None, None)
     assert len(ids) == 1
     assert _key(got) == _key(colds)
-    # a query touching a COLD term must keep the union path (the decode
-    # UDF is not SQL-expressible) and stay correct
+    # a query touching a COLD term unions the warm frame with the
+    # scan+decode of the cold term and stays correct
     tail = str(v["term"].iloc[-1])
     assert not eng._is_warm_term(tail, int(v["df"].iloc[-1]))
     q = f"{hot} {tail}"
@@ -196,19 +193,19 @@ def test_warm_plan_shape(spark, warm_idx):
     # repartition exchange) -- the live query region is everything above
     # the first such echo
     live = final.split("InMemoryRelation")[0]
-    assert "MapInPandas" not in live  # no per-query Arrow decode
+    # no per-query Arrow decode
+    assert "MapInPandas" not in live and "MapInArrow" not in live
     agg_region = live[live.find("TakeOrderedAndProject"):]
     assert "HashAggregate" in agg_region
     assert "Exchange hashpartitioning" not in agg_region
     assert "BroadcastExchange" not in agg_region  # literal-injected cand
 
 
-def test_warm_sql_template_ntf_and_field_restriction(spark, tmp_path):
-    """The warm SQL template (one spark.sql call per query) must stay
-    rank-identical to the cold Column path on the branches the shared
-    suite above doesn't reach: multi-field indexes, per-query field
-    restriction, and no_typo_tolerance_fields (typo matches excluded in
-    those fields only)."""
+def test_warm_ntf_and_field_restriction(spark, tmp_path):
+    """Warm serving must stay rank-identical to cold on the branches the
+    shared suite above doesn't reach: multi-field indexes, per-query
+    field restriction, and no_typo_tolerance_fields (typo matches
+    excluded in those fields only), under a full and a partial warm."""
     wh = str(tmp_path)
     s = IndexSettings(
         name="wsql",
@@ -227,70 +224,16 @@ def test_warm_sql_template_ntf_and_field_restriction(spark, tmp_path):
         ("tokenizer", dict(fields=["path"])),
     ]
     colds = [cold.search(q, k=50, **kw).collect() for q, kw in cases]
-    info = eng.warm()
-    assert info["sql_template"] is True
+    eng.warm()
+    eng2 = SearchEngine(spark, wh, "wsql")
+    assert eng2.warm(max_postings=200)["warm_terms"] != "all"
     for (q, kw), want in zip(cases, colds):
-        assert _key(eng.search(q, k=50, **kw).collect()) == _key(
-            want
-        ), (q, kw)
+        for e in (eng, eng2):
+            assert _key(e.search(q, k=50, **kw).collect()) == _key(
+                want
+            ), (q, kw)
     # at least one case must be non-empty or the identity is vacuous
     assert any(len(c) for c in colds)
-    # the template must be BIT-EXACT vs the warm DataFrame path (same
-    # cached frame, same expression trees -- SQL decimal-literal
-    # parsing once drifted the BM25 arithmetic ~1e-9 until the
-    # constants were emitted as explicit double casts)
-    tpl = eng._warm_sql
-    for q, kw in cases:
-        a = [tuple(r) for r in eng.search(q, k=50, **kw).collect()]
-        eng._warm_sql = None
-        b = [tuple(r) for r in eng.search(q, k=50, **kw).collect()]
-        eng._warm_sql = tpl
-        assert a == b, (q, kw)
-    # a partial warm builds the template too (round-5); it serves only
-    # queries whose candidates are all warm -- cold-term queries keep the
-    # union path (test_warm_partial_sql_template_one_job pins both)
-    eng2 = SearchEngine(spark, wh, "wsql")
-    info2 = eng2.warm(max_postings=200)
-    assert info2["sql_template"] is True
-    assert eng2._warm_sql is not None
-
-
-def test_warm_sql_views_dropped_on_rewarm_and_reload(spark, tmp_path):
-    """Temp views backing the warm SQL template must not accumulate in
-    the session catalog across re-warms or generation reloads."""
-    from go_search_engine_spark.build.maintenance import IndexMaintenance
-
-    wh = str(tmp_path)
-    s = IndexSettings(
-        name="wv",
-        searchable_fields=["content"],
-        fields_without_prefix_search=["content"],
-    )
-    corpus = generate_corpus(spark, 60, seed=44, words_per_doc=12)
-    IndexBuilder(spark, s, wh).build(corpus, num_shards=2)
-
-    def warm_views():
-        return {
-            t.name for t in spark.catalog.listTables()
-            if t.name.startswith("gse_warm_")
-        }
-
-    base = warm_views()
-    eng = SearchEngine(spark, wh, "wv")
-    eng.warm()
-    v1 = warm_views() - base
-    assert len(v1) == 2
-    eng.warm()  # re-warm replaces, never accumulates
-    v2 = warm_views() - base
-    assert len(v2) == 2 and v2 != v1
-    # a maintenance commit reloads the engine on the next query and
-    # drops the stale views with the stale warm state
-    IndexMaintenance(spark, wh, "wv").delete_documents(
-        [eng.search("tokenizer", k=1, typo_tolerance=False)
-         .collect()[0]["documentID"]]
-    )
-    eng.search("tokenizer", k=1, typo_tolerance=False).collect()
-    assert warm_views() - base == set()
 
 
 def test_rewarm_releases_previous_warm_state(spark, warm_idx):
@@ -311,13 +254,10 @@ def test_rewarm_releases_previous_warm_state(spark, warm_idx):
     assert len(rows) > 0
 
 
-def test_two_engines_warm_views_isolated(spark, warm_idx, tmp_path_factory):
-    """Two engines warmed on ONE SparkSession must never share temp-view
-    names (round-4 review: a shared counter read-then-increment races
-    under the API server's per-index job threads, and a collision
-    silently serves one index's cached SQL over the other's frames).
-    View names are uuid-based; both engines' cached templates must keep
-    answering from their OWN index."""
+def test_two_engines_warm_isolated(spark, warm_idx, tmp_path_factory):
+    """Two engines warmed on ONE SparkSession (the API server warms
+    per-index engines on job threads) must each keep answering from
+    their OWN index's warm frames."""
     wh2 = str(tmp_path_factory.mktemp("wh_warm2"))
     s = IndexSettings(
         name="w2",
@@ -336,8 +276,6 @@ def test_two_engines_warm_views_isolated(spark, warm_idx, tmp_path_factory):
                            typo_tolerance=False).collect())
     a.warm()
     b.warm()
-    assert a._warm_sql is not None and b._warm_sql is not None
-    assert not (set(a._warm_sql["views"]) & set(b._warm_sql["views"]))
     assert _key(a.search("tokenizer return", k=10,
                          typo_tolerance=False).collect()) == cold_a
     assert _key(b.search("tokenizer return", k=10,
