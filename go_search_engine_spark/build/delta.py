@@ -50,8 +50,9 @@ block scan ∪ delta-postings scan (term-filtered; delta files are small
 by design), both visibility-filtered. Positional operators
 (phrase/proximity/highlight) stay live under pending deltas too: delta
 postings carry the same varint position records as the base blocks, so
-``positional_rows`` (query/phrase.py) unions the visibility-filtered
-delta rows into the decoded stream -- no NRT feature gap.
+``SearchEngine.decoded_postings`` (query/engine.py) unions the
+visibility-filtered delta rows into the decoded stream -- no NRT feature
+gap.
 """
 
 from __future__ import annotations

@@ -5,24 +5,38 @@ pipeline (/root/reference/internal/search/service.go:76-674, mapped in
 SURVEY.md section 3.1):
 
   query --tokenize(driver)--> candidate terms (exact + typo scan over the
-  vocab, deterministic cap) --> block scan (term-bucket partition pruning +
-  term pushdown) --> Arrow-batched block decode --> exact-skip /
-  best-distance-wins (window) --> per-token max penalized BM25 -->
-  AND intersection (groupBy doc having token-count == n; rows are
-  per-(token, doc) so a plain count is the distinct count) -->
-  join docs --> total-order top-k (score desc, doc_id asc).
+  vocab, deterministic cap) --> posting read (term-bucket partition
+  pruning + term pushdown, Arrow-batched block decode; see below) -->
+  exact-skip / best-distance-wins (window) --> per-token max penalized
+  BM25 --> AND intersection (groupBy doc having token-count == n; rows
+  are per-(token, doc) so a plain count is the distinct count) -->
+  total-order top-k (score desc, doc_id asc) --> join docs.
+
+Two read paths, one decoder (SearchEngine.decoded_postings): the
+candidate table's df bounds a query's posting rows by sum(df) x |fields|.
+- At most one Arrow batch (the session's
+  ``spark.sql.execution.arrow.maxRecordsPerBatch``): the driver reads the
+  pruned block rows with pyarrow, decodes them, and hands Spark ONE
+  partition. A single partition satisfies every doc_id clustering, so the
+  plan has no block scan, no Python tasks and no exchange before top-k
+  (the reference likewise walks in-memory candidate postings,
+  service.go:328-438). This read happens at plan construction.
+- Above the bound: a pruned Spark block scan feeds the same decoder
+  through mapInArrow, and ONE hash exchange on doc_id satisfies the
+  whole score pipeline.
 
 Scale notes:
 - the vocabulary typo scan is a distributed mapInPandas over term_stats
   with a length-band pushdown filter (the reference scans the whole vocab
   single-threaded, typo_finder.go:79-124);
 - candidate terms are bounded (n_tokens x MAX_TYPO_CANDIDATES), so
-  collecting them to the driver and broadcasting is O(KB) -- the postings
-  themselves never leave the cluster;
+  collecting them to the driver and broadcasting is O(KB); postings reach
+  the driver only below the one-batch bound;
 - the blocks scan prunes partitions via the term-bucket directory key and
-  pushes ``term IN (...)`` to parquet row-group stats;
-- shuffles: candidate-sized only -- (token,term,doc) agg, (token,doc)
-  window+agg (one exchange, reused), (doc) agg, then TakeOrdered(k).
+  pushes ``term IN (...)`` to parquet row-group stats (the driver read
+  applies the same pruning);
+- shuffles: candidate-sized only -- at most the one doc_id exchange, then
+  TakeOrdered(k) and a k-row broadcast into the docs join.
 """
 
 from __future__ import annotations
@@ -33,6 +47,9 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -44,22 +61,31 @@ from ..config import (
     TYPO_PENALTY_1,
     TYPO_PENALTY_2,
 )
-from ..functions.codec import varint_decode
+from ..functions.codec import decode_position_records, varint_decode
 from ..functions.edit_distance import damerau_levenshtein_batch
 from ..functions.tokenizer import tokenize
 
 DECODED_SCHEMA = (
     "term string, field string, doc_id long, tf double, dl long, fw boolean"
 )
+POS_DECODED_SCHEMA = (
+    "term string, field string, doc_id long, fw boolean, positions array<int>"
+)
+# decoder input columns and output schema, keyed by ``positions``
+_DECODE_COLS = {
+    False: ("term", "field", "n", "doc_ids", "tfs", "dls", "fws"),
+    True: ("term", "field", "n", "doc_ids", "fws", "positions"),
+}
+_DECODED = {False: DECODED_SCHEMA, True: POS_DECODED_SCHEMA}
 
 
 def decode_blocks_arrow(
-    batches: Iterator["pa.RecordBatch"],
-) -> Iterator["pa.RecordBatch"]:
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
     """mapInArrow: block rows -> flat (term, field, doc_id[, tf, dl], fw
     [, positions]) -- tf/dl when the input carries the ``tfs``/``dls``
-    streams, positions when it carries ``positions`` (the scoring path
-    projects the former, phrase.positional_rows the latter).
+    streams, positions when it carries ``positions`` (decode_blocks and
+    SearchEngine._block_rows project one or the other).
 
     Mirror of the build-side whole-batch Arrow encoder
     (build/blocks.py:_encode_batch). Each binary cell is a
@@ -69,8 +95,6 @@ def decode_blocks_arrow(
     boundary arithmetic, and the term/field strings are replicated with
     Arrow ``take`` (no Python string objects).
     """
-    import pyarrow as pa
-
     from ..build.blocks import _binary_parts
 
     for batch in batches:
@@ -124,8 +148,8 @@ def decode_blocks_arrow(
 
 
 def _block_positions(
-    arr: "pa.Array", counts: np.ndarray, vstart: np.ndarray
-) -> "pa.Array":
+    arr: pa.Array, counts: np.ndarray, vstart: np.ndarray
+) -> pa.Array:
     """Per-posting position lists (list<int32>) of a batch's block
     ``positions`` cells. A cell holds its block's ``n`` records
     [count, first, deltas...] back to back (build/flatmap.py), so the
@@ -133,8 +157,6 @@ def _block_positions(
     record starts are walked in a loop bounded by the block size,
     vectorized across blocks, and the positions come out of a segmented
     cumsum (as in codec.decode_position_records)."""
-    import pyarrow as pa
-
     from ..build.blocks import _binary_parts
 
     offs, data = _binary_parts(arr)
@@ -163,15 +185,46 @@ def _block_positions(
     )
 
 
-def decode_blocks(blk: DataFrame) -> DataFrame:
+def decode_blocks(blk: DataFrame, positions: bool = False) -> DataFrame:
     """Block rows -> flat decoded postings via the module-level Arrow
-    decoder (module attribute lookup at call time keeps the decode UDF
-    monkeypatchable for the decode-count tests)."""
+    decoder, with tf/dl (scoring) or positions (positional operators).
+    Projects BEFORE the decode UDF: column pruning cannot reach through
+    mapInArrow, and the unused stream is the bulk of a block row's
+    bytes. Module attribute lookup at call time keeps the decode UDF
+    monkeypatchable for the decode-count tests."""
     import go_search_engine_spark.query.engine as _self
 
-    return blk.select(
-        "term", "field", "n", "doc_ids", "tfs", "dls", "fws"
-    ).mapInArrow(_self.decode_blocks_arrow, schema=DECODED_SCHEMA)
+    return blk.select(*_DECODE_COLS[positions]).mapInArrow(
+        _self.decode_blocks_arrow, schema=_DECODED[positions]
+    )
+
+
+_POS_UDF = None
+
+
+def _decode_pos_record(col):
+    """One varint position record ([count, first, deltas...]) per cell ->
+    int[], null -> []. Arrow UDF over the column's data and offset
+    buffers (``decode_position_records``), created lazily (the DDL return
+    type is parsed against the ACTIVE session, so no module-import-time
+    registration); only ever applied to delta rows."""
+    global _POS_UDF
+    if _POS_UDF is None:
+
+        @F.arrow_udf("array<int>")
+        def decode_records(bufs: pa.Array) -> pa.Array:
+            bufs = pc.fill_null(bufs, b"").cast(pa.large_binary())
+            _, offs, data = bufs.buffers()
+            offs = np.frombuffer(offs, dtype=np.int64)[
+                bufs.offset : bufs.offset + len(bufs) + 1
+            ]
+            lo, pos = decode_position_records(data or b"", offs)
+            return pa.ListArray.from_arrays(
+                pa.array(lo, pa.int32()), pa.array(pos)
+            )
+
+        _POS_UDF = decode_records
+    return _POS_UDF(col)
 
 
 def _esc(s: str) -> str:
@@ -292,6 +345,14 @@ class SearchEngine:
                 table_path(self.base, "docs", self.stats)
             )
         self._vocab_pd: pd.DataFrame | None = None
+        # driver-side Arrow view of this generation's blocks (see
+        # _block_rows), built on first use
+        self._blocks_ds = None
+        # the driver read's gate: createDataFrame(pa.Table) makes one
+        # partition per batch of this many rows
+        self._batch_rows = int(
+            self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        )
         self._generation = int(self.stats.get("generation", 0))
         # warm serving mode state (see warm()); dropped on reload so a
         # maintenance rewrite can never serve stale decoded postings
@@ -946,67 +1007,133 @@ class SearchEngine:
             ),
         )
 
+    def _blocks_dataset(self):
+        """pyarrow dataset over this generation's blocks table (hive
+        ``bucket`` partitions), listed once per generation."""
+        if self._blocks_ds is None:
+            from ..build.delta import table_path
+
+            self._blocks_ds = ds.dataset(
+                table_path(self.base, "blocks", self.stats),
+                format="parquet",
+                partitioning="hive",
+            )
+        return self._blocks_ds
+
+    def _block_rows(
+        self, cand: pd.DataFrame, fields: list[str], positions: bool = False
+    ) -> tuple[DataFrame, bool]:
+        """Decoded base-block postings of the candidate terms, and whether
+        they were read on the driver.
+
+        The candidate table's ``df`` bounds the rows: a (term, field)
+        pair holds at most df postings, so a query decodes at most
+        sum(df) x |fields| rows. When that fits ONE Arrow batch the blocks
+        are read and decoded right here (pyarrow dataset with the Spark
+        path's pruning: bucket partitions, ``term IN``, ``field IN``) and
+        handed to Spark as one partition -- no scan+decode stage, no
+        Python tasks. Over the bound: the pruned Spark block scan feeding
+        the mapInArrow decoder. Both paths run the same decoder."""
+        terms = sorted(set(cand["term"]))
+        per_term = cand.drop_duplicates("term")["df"]
+        if int(per_term.sum()) * len(fields) > self._batch_rows:
+            blk = self.candidate_blocks(cand, fields)
+            return decode_blocks(blk, positions), False
+        import go_search_engine_spark.query.engine as _self
+
+        blk = self._blocks_dataset().to_table(
+            columns=list(_DECODE_COLS[positions]),
+            filter=ds.field("bucket").isin(self._term_buckets(terms))
+            & ds.field("term").isin(terms)
+            & ds.field("field").isin(list(fields)),
+        )
+        batches = list(_self.decode_blocks_arrow(blk.to_batches()))
+        if not batches:
+            return self.spark.createDataFrame([], schema=_DECODED[positions]), True
+        return self.spark.createDataFrame(
+            pa.Table.from_batches(batches), schema=_DECODED[positions]
+        ), True
+
+    def decoded_postings(
+        self, cand: pd.DataFrame, fields: list[str], positions: bool = False
+    ) -> DataFrame:
+        """THE posting reader of the ranked and positional operators:
+        (term, field, doc_id, tf, dl, fw) -- or (term, field, doc_id, fw,
+        positions) -- of the candidate table's terms in ``fields``,
+        pending deltas applied, CLUSTERED BY doc_id. Every aggregation
+        and window downstream (score_and_intersect, the phrase/proximity
+        anchor groupings) clusters on a key set containing doc_id, so
+        callers never repartition.
+
+        A driver read (_block_rows) arrives as one partition:
+        ``coalesce(1)`` makes it SinglePartition, which satisfies every
+        clustering, so the plan has no exchange before top-k. A Spark read
+        is hash-partitioned by doc_id: one exchange, placed before the
+        candidate attach so the attach's interpreted filter(array) runs
+        at full parallelism instead of in the scan's few splits.
+
+        Pending deltas: the base blocks still hold replaced docs'
+        postings (hidden by tombstones) and the new postings live only in
+        the flat delta files -- the candidate terms' delta rows are
+        unioned on top and generation visibility applied
+        (build/delta.py)."""
+        decoded, on_driver = self._block_rows(cand, fields, positions)
+        if self._delta:
+            from ..build.delta import apply_visibility
+
+            terms = sorted(set(cand["term"]))
+            cols = (
+                [_decode_pos_record(F.col("positions")).alias("positions")]
+                if positions else ["tf", "dl"]
+            )
+            dp = self._delta_post.filter(
+                F.col("term").isin(terms) & F.col("field").isin(fields)
+            ).select(
+                "term", "field", "doc_id", *cols,
+                F.col("is_full_word").alias("fw"), "gen",
+            )
+            decoded = apply_visibility(
+                decoded.withColumn("gen", F.lit(0)).unionByName(dp),
+                "gen",
+                self._tomb,
+            ).drop("gen")
+        if on_driver:
+            return decoded.coalesce(1)
+        return decoded.repartition(F.col("doc_id"))
+
     def scan_candidates(
         self, cand: pd.DataFrame, fields: list[str]
     ) -> DataFrame:
         """Decoded postings of candidate terms joined with candidate meta:
         (token, term, distance, penalty, idf, field, doc_id, tf, dl, fw).
 
-        Warm serving mode: terms covered by the persisted decoded frame
-        are filtered from it (no scan, no Arrow decode); cold terms keep
-        the pruned scan+decode path; the two unioned."""
+        Cold mode reads through decoded_postings, so the frame arrives
+        clustered by doc_id: one partition for a driver read, one
+        doc_id exchange for a Spark read. Warm serving mode: terms
+        covered by the persisted decoded frame are filtered from it (no
+        scan, no decode); cold terms are read by _block_rows and unioned
+        (the union loses the warm frame's partitioning either way)."""
+        if self._warm_decoded is None:
+            return self.attach_cand(self.decoded_postings(cand, fields), cand)
         terms = sorted(set(cand["term"]))
-        decoded = None
-        cold = terms
-        if self._warm_decoded is not None:
-            dfmap = {
-                str(t): int(d) for t, d in zip(cand["term"], cand["df"])
-            }
-            warm = [t for t in terms if self._is_warm_term(t, dfmap[t])]
-            cold = [] if self._warm_all else [
-                t for t in terms if not self._is_warm_term(t, dfmap[t])
-            ]
-            if warm:
-                decoded = self._warm_decoded.filter(
+        dfmap = {str(t): int(d) for t, d in zip(cand["term"], cand["df"])}
+        warm = [t for t in terms if self._is_warm_term(t, dfmap[t])]
+        cold = sorted(set(terms) - set(warm))
+        parts = []
+        if warm:
+            parts.append(
+                self._warm_decoded.filter(
                     F.col("term").isin(warm) & F.col("field").isin(fields)
                 )
+            )
         if cold:
-            blk = self.candidate_blocks(
-                cand[cand["term"].isin(cold)], fields
+            parts.append(
+                self._block_rows(cand[cand["term"].isin(cold)], fields)[0]
             )
-            # decode_blocks projects BEFORE the decode UDF: column
-            # pruning cannot reach through mapInArrow, and the unused
-            # ``positions`` stream is the bulk of a block row's bytes
-            cold_dec = decode_blocks(blk)
-            decoded = cold_dec if decoded is None else decoded.unionByName(cold_dec)
-        if decoded is None:  # no candidate terms at all
-            decoded = self.spark.createDataFrame([], schema=DECODED_SCHEMA)
-        if self._delta and self._warm_decoded is None:
-            # pending deltas: base blocks still hold the replaced docs'
-            # postings (hidden by tombstones) and the new postings live
-            # only in the flat delta files -- union candidate terms' delta
-            # rows and apply generation visibility (build/delta.py)
-            from ..build.delta import apply_visibility
-
-            dp = self._delta_post.filter(
-                F.col("term").isin(terms) & F.col("field").isin(fields)
-            ).select(
-                "term", "field", "doc_id", "tf", "dl",
-                F.col("is_full_word").alias("fw"), "gen",
-            )
-            base = decoded.withColumn("gen", F.lit(0))
-            decoded = apply_visibility(
-                base.unionByName(dp), "gen", self._tomb
-            ).drop("gen")
-        if self._warm_decoded is None:
-            # cold path: repartition by doc_id BEFORE the candidate
-            # attach -- the attach's interpreted filter(array) would
-            # otherwise run inside the decode stage's few scan splits
-            # (near-serial), and the attach is narrow so the partitioning
-            # survives it, leaving the whole downstream score pipeline
-            # exchange-free (every clustering key set there contains
-            # doc_id). The warm frame is persisted doc_id-partitioned.
-            decoded = decoded.repartition(F.col("doc_id"))
+        decoded = (
+            reduce(DataFrame.unionByName, parts) if parts
+            else self.spark.createDataFrame([], schema=DECODED_SCHEMA)
+        )
         return self.attach_cand(decoded, cand)
 
     # ------------------------------------------------------------------
@@ -1049,44 +1176,62 @@ class SearchEngine:
         """Exhaustive scoring plan from a prepared candidate table (shared
         by search() and the WAND exhaustive tiers): scan_candidates ->
         score_and_intersect -> finish_topk, warm or cold. Cold mode
-        arrives doc_id-partitioned from scan_candidates (one exchange
-        satisfying the whole score pipeline), warm mode from its
-        persisted partitioning -- neither needs an exchange here."""
+        arrives clustered by doc_id from decoded_postings (one partition
+        from a driver read, one doc_id exchange from a Spark read), warm
+        mode from its persisted partitioning -- neither needs an exchange
+        here."""
         matched = self.scan_candidates(cand, fields)
         scored = self.score_and_intersect(matched, n_tokens=n_tokens)
         return self.finish_topk(scored, k)
 
-    def finish_topk(self, scored: DataFrame, k: int) -> DataFrame:
-        ex = self._exprs()
-        if self._docs_slim is not None:
+    def finish_topk(
+        self,
+        scored: DataFrame,
+        k: int,
+        score: str = "score",
+        cols: tuple[str, ...] = ("num_typos", "number_exact_words"),
+    ) -> DataFrame:
+        """Top-k of a per-doc ranked frame under the total order (``score``
+        desc, doc_id asc), with documentID attached: (rank, doc_id,
+        documentID, ``score``, *``cols``). The ONE finish of every ranked
+        operator -- BM25 search, WAND, phrase and proximity counts."""
+        if score == "score":
+            ex = self._exprs()
+            order, rank_w = ex["order"], ex["rank_w"]
+        else:
+            order = [F.desc(score), F.asc("doc_id")]
+            rank_w = Window.orderBy(*order)
+        if self._docs_slim is not None and score == "score":
+            # warm BM25 frames are partitioned like the warm frame, and a
             # shuffle-hash hint vetoes the broadcast the planner would
             # otherwise pick: both sides are already HashPartitioning
             # (doc_id, N), so the hinted join inserts NO exchange and
             # spares the per-query BroadcastExchange job
             out = (
                 scored.join(self._docs_slim.hint("shuffle_hash"), "doc_id")
-                .orderBy(*ex["order"])
+                .orderBy(*order)
                 .limit(k)
             )
         else:
-            # cold path: the total order needs only (score, doc_id), so
-            # take the top-k BEFORE attaching documentID -- the docs
-            # table then joins against k rows (broadcast build side, no
-            # corpus-sized docs shuffle) instead of the full scored
-            # frame. Sound because every scored doc_id exists in docs
-            # (postings and docs commit atomically per generation, and
-            # the delta path applies visibility before scoring).
-            topk = scored.orderBy(*ex["order"]).limit(k)
-            out = F.broadcast(topk).join(
-                self.docs.select("doc_id", "documentID"), "doc_id"
+            # the total order needs only (score, doc_id), so take the
+            # top-k BEFORE attaching documentID -- the docs table then
+            # joins against k rows (broadcast build side, no corpus-sized
+            # docs shuffle) instead of the full ranked frame. Sound
+            # because every ranked doc_id exists in docs (postings and
+            # docs commit atomically per generation, and decoded_postings
+            # applies delta visibility before any ranking).
+            docs = (
+                self._docs_slim if self._docs_slim is not None
+                else self.docs.select("doc_id", "documentID")
             )
+            topk = scored.orderBy(*order).limit(k)
+            out = F.broadcast(topk).join(docs, "doc_id")
         return out.select(
-            F.row_number().over(ex["rank_w"]).alias("rank"),
+            F.row_number().over(rank_w).alias("rank"),
             "doc_id",
             "documentID",
-            "score",
-            "num_typos",
-            "number_exact_words",
+            score,
+            *cols,
         )
 
     def _exprs(self) -> dict:
@@ -1255,17 +1400,15 @@ class SearchEngine:
         (declared dead in the reference, index/posting.go:10) surfaced for
         hit highlighting. Same survivor semantics as field_matches (shared
         ``_display_survivors`` pipeline)."""
-        from .phrase import positional_rows
-
         if not getattr(self.settings, "store_positions", True):
             raise ValueError(
                 "index was built with store_positions=False; highlight "
                 "needs stored positions -- rebuild with store_positions=True"
             )
 
-        # delta-aware (positional_rows unions visibility-filtered delta
+        # delta-aware (decoded_postings unions visibility-filtered delta
         # rows): highlight works under pending NRT deltas
-        decoded = positional_rows(self, cand, fields)
+        decoded = self.decoded_postings(cand, fields, positions=True)
         matched = decoded.join(self.cand_frame(cand), "term")
         best = self._display_survivors(matched, doc_ids)
         return best.select(

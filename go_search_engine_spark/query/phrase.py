@@ -14,98 +14,30 @@ participate (an edge n-gram is not a word occurrence; its stored position
 is the generating token's).
 
 Plan shape (scale notes):
-  phrase tokens --exact terms--> bucket-pruned block scan (zero-job
-  partition pruning + ``term IN`` row-group pushdown, same path as the
-  BM25 engine) --> Arrow-batched decode WITH positions --> broadcast join
-  against the (term, slot) phrase table --> explode positions -->
-  anchor = position - slot --> groupBy(doc, field, anchor) having all n
-  slots present (bit_or slot mask; countDistinct for 64+-token phrases)
-  --> per-doc occurrence count.
-All shuffles are candidate-sized (postings of the phrase terms only);
-the anchor trick turns adjacency into an equi-key aggregation -- no
-self-join per adjacent pair, no window over the token stream.
+  phrase tokens --exact terms--> SearchEngine.decoded_postings WITH
+  positions (the BM25 engine's posting reader: bucket-pruned, ``term IN``
+  pushdown, Arrow-batched decode; read on the driver into one partition
+  when the terms' df bound fits one Arrow batch, else a Spark scan +
+  decode hash-partitioned by doc_id) --> broadcast join against the
+  (term, slot) phrase table --> explode positions --> anchor = position
+  - slot --> groupBy(doc, field, anchor) having all n slots present
+  (bit_or slot mask; countDistinct for 64+-token phrases) --> per-doc
+  occurrence count --> SearchEngine.finish_topk (top-k, then a k-row
+  broadcast into the docs join).
+Every grouping here clusters on a key set containing doc_id, so the
+reader's partitioning serves them all: no exchange before top-k on the
+driver read, one doc_id exchange on the Spark read. The anchor trick
+turns adjacency into an equi-key aggregation -- no self-join per
+adjacent pair, no window over the token stream.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.codec import decode_position_records
 from ..functions.tokenizer import tokenize
-from . import engine as _engine_mod
-
-POS_DECODED_SCHEMA = (
-    "term string, field string, doc_id long, fw boolean, positions array<int>"
-)
-
-
-def positional_rows(engine, cand: pd.DataFrame, fields: list[str]) -> DataFrame:
-    """(term, field, doc_id, fw, positions) for the candidate terms:
-    bucket-pruned base blocks decoded WITH positions, plus -- when delta
-    segments are pending -- the visibility-filtered delta rows (delta
-    postings carry the same varint position records, build/flatmap.py),
-    so positional operators work under NRT deltas (round-4 VERDICT #4;
-    previously correct-by-refusal)."""
-    # the scoring decoder, fed the positions stream instead of tfs/dls
-    # (module attribute lookup at call time keeps it monkeypatchable)
-    decoded = (
-        engine.candidate_blocks(cand, fields)
-        .select("term", "field", "n", "doc_ids", "fws", "positions")
-        .mapInArrow(_engine_mod.decode_blocks_arrow, schema=POS_DECODED_SCHEMA)
-    )
-    if engine._delta:
-        from ..build.delta import apply_visibility
-
-        terms = sorted(set(cand["term"]))
-        dp = engine._delta_post.filter(
-            F.col("term").isin(terms) & F.col("field").isin(fields)
-        ).select(
-            "term",
-            "field",
-            "doc_id",
-            F.col("is_full_word").alias("fw"),
-            _decode_pos_record(F.col("positions")).alias("positions"),
-            "gen",
-        )
-        decoded = apply_visibility(
-            decoded.withColumn("gen", F.lit(0)).unionByName(dp),
-            "gen",
-            engine._tomb,
-        ).drop("gen")
-    return decoded
-
-
-_POS_UDF = None
-
-
-def _decode_pos_record(col):
-    """One varint position record ([count, first, deltas...]) per cell ->
-    int[], null -> []. Arrow UDF over the column's data and offset
-    buffers (``decode_position_records``), created lazily (the DDL return
-    type is parsed against the ACTIVE session, so no module-import-time
-    registration); only ever applied to delta rows."""
-    global _POS_UDF
-    if _POS_UDF is None:
-
-        @F.arrow_udf("array<int>")
-        def decode_records(bufs: pa.Array) -> pa.Array:
-            bufs = pc.fill_null(bufs, b"").cast(pa.large_binary())
-            _, offs, data = bufs.buffers()
-            offs = np.frombuffer(offs, dtype=np.int64)[
-                bufs.offset : bufs.offset + len(bufs) + 1
-            ]
-            lo, pos = decode_position_records(data or b"", offs)
-            return pa.ListArray.from_arrays(
-                pa.array(lo, pa.int32()), pa.array(pos)
-            )
-
-        _POS_UDF = decode_records
-    return _POS_UDF(col)
 
 
 def phrase_search(
@@ -141,15 +73,9 @@ def phrase_search(
         )
     )
     grouped = (
+        # broadcast join: narrow, so the reader's doc_id clustering
+        # reaches every grouping below (their key sets contain doc_id)
         decoded.join(qidx, "term")
-        # repartition by doc_id BEFORE the position explode: the decode
-        # stage inherits the pruned block scan's few splits, so the
-        # explode + anchor aggregation would otherwise run near-serial
-        # (the fan-out is invisible to scan-split sizing); doc_id
-        # partitioning also satisfies every downstream grouping here
-        # (their key sets contain doc_id), so this is the plan's ONLY
-        # exchange before top-k
-        .repartition(F.col("doc_id"))
         .select(
             "doc_id",
             "field",
@@ -177,15 +103,7 @@ def phrase_search(
     hits = anchors.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_occurrences")
     )
-    out = (
-        hits.join(engine.docs.select("doc_id", "documentID"), "doc_id")
-        .orderBy(F.desc("n_occurrences"), F.asc("doc_id"))
-        .limit(k)
-    )
-    w = Window.orderBy(F.desc("n_occurrences"), F.asc("doc_id"))
-    return out.withColumn("rank", F.row_number().over(w)).select(
-        "rank", "doc_id", "documentID", "n_occurrences"
-    )
+    return engine.finish_topk(hits, k, "n_occurrences", ())
 
 
 def _scan_positions(engine, terms: list[str], fields: list[str]):
@@ -199,24 +117,27 @@ def _scan_positions(engine, terms: list[str], fields: list[str]):
             "proximity need stored positions -- rebuild with "
             "store_positions=True"
         )
-    cand = pd.DataFrame({"term": sorted(set(terms))})
-    meta = engine._with_stats(cand)
+    meta = engine._with_stats(pd.DataFrame({"term": sorted(set(terms))}))
     dfs = dict(zip(meta["term"], (int(x) for x in meta["df"])))
     if min(dfs.values()) == 0:
         return None
-    decoded = positional_rows(engine, cand, fields).filter(F.col("fw"))
+    decoded = engine.decoded_postings(meta, fields, positions=True).filter(
+        F.col("fw")
+    )
     if len(dfs) > 1 and max(dfs.values()) >= 4 * min(dfs.values()):
-        # deliberate SECOND scan of the rare term's blocks (bucket-pruned,
+        # deliberate SECOND read of the rare term's blocks (bucket-pruned,
         # cheap by definition): deriving the pair set from `decoded`
         # instead would re-decode EVERY term's blocks (Catalyst does not
         # dedupe shared subplans without a persist, and persisting all
         # decoded postings is worse at scale than re-reading the rare
-        # ones). Delta-aware through the same positional_rows source, so
-        # a doc whose rare-term posting lives only in a delta gen still
-        # survives the semi-join.
+        # ones). Delta-aware through the same reader, so a doc whose
+        # rare-term posting lives only in a delta gen still survives the
+        # semi-join.
         rare_t = min(dfs, key=lambda t: (dfs[t], t))
         rare_pairs = (
-            positional_rows(engine, pd.DataFrame({"term": [rare_t]}), fields)
+            engine.decoded_postings(
+                meta[meta["term"] == rare_t], fields, positions=True
+            )
             .filter(F.col("fw"))
             .select("doc_id", "field")
             .distinct()
@@ -260,13 +181,8 @@ def proximity_search(
     if decoded is None:
         return _empty_prox(engine)
     anchors = (
-        # same pre-explode doc_id repartition as phrase_search: the
-        # window fan-out (x window anchors per occurrence) is invisible
-        # to the pruned scan's split sizing, and doc_id partitioning
-        # satisfies both groupings below
-        decoded.repartition(F.col("doc_id"))
-        .select("doc_id", "field", "term",
-                F.explode("positions").alias("pos"))
+        decoded.select("doc_id", "field", "term",
+                       F.explode("positions").alias("pos"))
         .select(
             "doc_id",
             "field",
@@ -284,15 +200,7 @@ def proximity_search(
     hits = anchors.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_windows")
     )
-    out = (
-        hits.join(engine.docs.select("doc_id", "documentID"), "doc_id")
-        .orderBy(F.desc("n_windows"), F.asc("doc_id"))
-        .limit(k)
-    )
-    w_rank = Window.orderBy(F.desc("n_windows"), F.asc("doc_id"))
-    return out.withColumn("rank", F.row_number().over(w_rank)).select(
-        "rank", "doc_id", "documentID", "n_windows"
-    )
+    return engine.finish_topk(hits, k, "n_windows", ())
 
 
 def _empty_prox(engine) -> DataFrame:

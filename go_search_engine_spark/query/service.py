@@ -122,8 +122,8 @@ class SearchService:
         fields, tokens, cand = prep or self._prepare(req, cand)
         if not tokens:
             return eng._empty_result()
-        # cold mode arrives doc_id-partitioned from scan_candidates (one
-        # exchange feeding the whole score pipeline)
+        # cold mode arrives clustered by doc_id from scan_candidates (one
+        # partition from a driver read, else one doc_id exchange)
         matched = eng.scan_candidates(cand, fields)
         scored = eng.score_and_intersect(matched, n_tokens=len(tokens))
         hits = scored.join(eng.docs, "doc_id")

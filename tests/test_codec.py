@@ -195,8 +195,8 @@ _POSTING = st.tuples(
 )
 def test_arrow_decoder_positions_match_reference(groups, block_size, skip):
     """The positions stream of the whole-batch Arrow decoder
-    (query/engine.decode_blocks_arrow, as phrase.positional_rows feeds
-    it) equals the per-row reference decoder (build/blocks.decode_block)
+    (query/engine.decode_blocks_arrow, as SearchEngine.decoded_postings
+    feeds it) equals the per-row reference decoder (build/blocks.decode_block)
     on encoder output: empty position lists, multi-byte values, blocks of
     1..9 postings, and a sliced batch (nonzero Arrow offset)."""
     import pyarrow as pa

@@ -185,6 +185,14 @@ def test_delta_positional_parity_and_guards(spark, twin):
         )
 
 
+def test_delta_spark_read_path(spark, twin, spark_read):
+    """Tombstones and delta postings pending, distributed posting read
+    forced: search, phrase, proximity and highlight still equal the
+    refresh twin (the tests above run on the driver read)."""
+    test_delta_results_identical_to_refresh(spark, twin)
+    test_delta_positional_parity_and_guards(spark, twin)
+
+
 def test_delta_warm_identical(spark, twin):
     wh = twin
     cold = _search_all(spark, wh, "dlt")

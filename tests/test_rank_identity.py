@@ -64,6 +64,14 @@ def test_rank_identical(engine_and_oracle, qid, query, k):
         assert g["num_typos"] == w.num_typos
 
 
+@pytest.mark.parametrize("qid,query,k", QUERIES)
+def test_rank_identical_spark_read(engine_and_oracle, spark_read, qid, query, k):
+    """test_rank_identical on the distributed posting read (scan +
+    mapInArrow decode + doc_id exchange) instead of the driver read."""
+    spark_read(engine_and_oracle[0])
+    test_rank_identical(engine_and_oracle, qid, query, k)
+
+
 def test_prefix_search_on_path(engine_and_oracle):
     # path field is prefix-indexed: a query prefix of "file"/"pkg" matches
     # via doc-side edge n-grams, nothing query-side (service.go:133)

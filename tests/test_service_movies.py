@@ -447,6 +447,12 @@ def test_highlight_offsets(service):
     assert "spede(typo)" in disp
 
 
+def test_highlight_offsets_spark_read(service, spark_read):
+    """test_highlight_offsets on the distributed posting read."""
+    spark_read(service.engine)
+    test_highlight_offsets(service)
+
+
 def test_include_field_matches(service):
     """SearchRequest(include_field_matches=True): per-hit FieldMatches
     map (field -> matched display terms), reference service.go:425-432."""
@@ -470,13 +476,14 @@ def test_include_field_matches(service):
     assert "field_matches" not in r2.hits[0]
 
 
-def test_search_single_pass_scan(service, monkeypatch):
+def test_search_single_pass_scan(service, monkeypatch, spark_read):
     """The ranked frame is persisted, so a whole service request (total
     count + page slice) decodes the candidate posting blocks EXACTLY as
-    many times as one engine pass -- never twice. Measured with an
-    accumulator counting block rows entering the decode UDF (job counts
-    are meaningless under AQE: every exchange materialization is its own
-    job)."""
+    many times as one engine pass -- never twice -- on both posting
+    reads. Measured with an accumulator counting block rows entering the
+    decoder (job counts are meaningless under AQE: every exchange
+    materialization is its own job); the driver read adds to it on the
+    driver, at plan construction."""
     import go_search_engine_spark.query.engine as eng_mod
 
     eng = service.engine
@@ -492,16 +499,20 @@ def test_search_single_pass_scan(service, monkeypatch):
         return orig(metered())
 
     monkeypatch.setattr(eng_mod, "decode_blocks_arrow", counting)
-    eng.search("matrix neo", k=10, typo_tolerance=False).collect()
-    one_pass = acc.value
-    assert one_pass > 0
-    service.search(SearchRequest(query="matrix neo", typo_tolerance=False))
-    service_pass = acc.value - one_pass
-    assert service_pass == one_pass, (
-        f"service request decoded {service_pass} block rows vs "
-        f"{one_pass} for a single engine pass -- the ranked frame is "
-        "being executed more than once"
-    )
+    for path in ("driver", "spark"):
+        if path == "spark":
+            spark_read(eng)
+        start = acc.value
+        eng.search("matrix neo", k=10, typo_tolerance=False).collect()
+        one_pass = acc.value - start
+        assert one_pass > 0, path
+        service.search(SearchRequest(query="matrix neo", typo_tolerance=False))
+        service_pass = acc.value - start - one_pass
+        assert service_pass == one_pass, (
+            f"{path} read: service request decoded {service_pass} block "
+            f"rows vs {one_pass} for a single engine pass -- the ranked "
+            "frame is being executed more than once"
+        )
 
 
 def test_filter_non_filterable_field_warns(service, caplog):
