@@ -14,9 +14,9 @@ SURVEY.md section 3.1):
 
 Two read paths, one decoder (SearchEngine.decoded_postings): the
 candidate table's df bounds a query's posting rows by sum(df) x |fields|.
-- At most one Arrow batch (the session's
-  ``spark.sql.execution.arrow.maxRecordsPerBatch``): the driver reads the
-  pruned block rows with pyarrow, decodes them, and hands Spark ONE
+- At most DRIVER_READ_MAX_ROWS (10k, under the crossover measured on
+  the 150k-doc scaling index) and no tombstones pending: the driver reads
+  the pruned block rows with pyarrow, decodes them, and hands Spark ONE
   partition. A single partition satisfies every doc_id clustering, so the
   plan has no block scan, no Python tasks and no exchange before top-k
   (the reference likewise walks in-memory candidate postings,
@@ -31,7 +31,7 @@ Scale notes:
   single-threaded, typo_finder.go:79-124);
 - candidate terms are bounded (n_tokens x MAX_TYPO_CANDIDATES), so
   collecting them to the driver and broadcasting is O(KB); postings reach
-  the driver only below the one-batch bound;
+  the driver only below the driver-read bound;
 - the blocks scan prunes partitions via the term-bucket directory key and
   pushes ``term IN (...)`` to parquet row-group stats (the driver read
   applies the same pruning);
@@ -77,6 +77,18 @@ _DECODE_COLS = {
     True: ("term", "field", "n", "doc_ids", "fws", "positions"),
 }
 _DECODED = {False: DECODED_SCHEMA, True: POS_DECODED_SCHEMA}
+# The driver read's gate (SearchEngine._block_rows): a query whose
+# candidate postings, bounded by sum(df) x |fields|, number at most this
+# many rows is read and decoded on the driver into one partition. That
+# saves the scan+decode stage and the doc_id exchange, but runs all the
+# scoring downstream in one task, so it loses on large queries. Measured
+# on a 4-core host over the 150k-doc scaling index (bench.py
+# latency_150k), medians of 5 interleaved runs, driver vs Spark read:
+# 4.3k rows 442 vs 747 ms, 17.7k 532 vs 832 ms, 36k 871 vs 1,025 ms,
+# 105k 1,798 vs 1,260 ms, 383k 5,411 vs 2,608 ms. The bound sits well
+# under that crossover; more cores speed up only the Spark read, which
+# moves the crossover down.
+DRIVER_READ_MAX_ROWS = 10_000
 
 
 def decode_blocks_arrow(
@@ -348,11 +360,6 @@ class SearchEngine:
         # driver-side Arrow view of this generation's blocks (see
         # _block_rows), built on first use
         self._blocks_ds = None
-        # the driver read's gate: createDataFrame(pa.Table) makes one
-        # partition per batch of this many rows
-        self._batch_rows = int(
-            self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-        )
         self._generation = int(self.stats.get("generation", 0))
         # warm serving mode state (see warm()); dropped on reload so a
         # maintenance rewrite can never serve stale decoded postings
@@ -1028,26 +1035,33 @@ class SearchEngine:
 
         The candidate table's ``df`` bounds the rows: a (term, field)
         pair holds at most df postings, so a query decodes at most
-        sum(df) x |fields| rows. When that fits ONE Arrow batch the blocks
+        sum(df) x |fields| rows. At most DRIVER_READ_MAX_ROWS, the blocks
         are read and decoded right here (pyarrow dataset with the Spark
         path's pruning: bucket partitions, ``term IN``, ``field IN``) and
         handed to Spark as one partition -- no scan+decode stage, no
         Python tasks. Over the bound: the pruned Spark block scan feeding
-        the mapInArrow decoder. Both paths run the same decoder."""
+        the mapInArrow decoder. Both paths run the same decoder.
+
+        Pending tombstones void the bound: ``df`` is the delta-merged
+        count, but the base blocks keep every tombstoned posting until a
+        compaction folds it, so a term whose docs were mostly deleted
+        would pass the gate with its whole base posting list. Those
+        queries take the Spark read."""
         terms = sorted(set(cand["term"]))
         per_term = cand.drop_duplicates("term")["df"]
-        if int(per_term.sum()) * len(fields) > self._batch_rows:
+        if (
+            self._tomb is not None
+            or int(per_term.sum()) * len(fields) > DRIVER_READ_MAX_ROWS
+        ):
             blk = self.candidate_blocks(cand, fields)
             return decode_blocks(blk, positions), False
-        import go_search_engine_spark.query.engine as _self
-
         blk = self._blocks_dataset().to_table(
             columns=list(_DECODE_COLS[positions]),
             filter=ds.field("bucket").isin(self._term_buckets(terms))
             & ds.field("term").isin(terms)
             & ds.field("field").isin(list(fields)),
         )
-        batches = list(_self.decode_blocks_arrow(blk.to_batches()))
+        batches = list(decode_blocks_arrow(blk.to_batches()))
         if not batches:
             return self.spark.createDataFrame([], schema=_DECODED[positions]), True
         return self.spark.createDataFrame(
@@ -1195,12 +1209,7 @@ class SearchEngine:
         desc, doc_id asc), with documentID attached: (rank, doc_id,
         documentID, ``score``, *``cols``). The ONE finish of every ranked
         operator -- BM25 search, WAND, phrase and proximity counts."""
-        if score == "score":
-            ex = self._exprs()
-            order, rank_w = ex["order"], ex["rank_w"]
-        else:
-            order = [F.desc(score), F.asc("doc_id")]
-            rank_w = Window.orderBy(*order)
+        order = [F.desc(score), F.asc("doc_id")]
         if self._docs_slim is not None and score == "score":
             # warm BM25 frames are partitioned like the warm frame, and a
             # shuffle-hash hint vetoes the broadcast the planner would
@@ -1227,7 +1236,7 @@ class SearchEngine:
             topk = scored.orderBy(*order).limit(k)
             out = F.broadcast(topk).join(docs, "doc_id")
         return out.select(
-            F.row_number().over(rank_w).alias("rank"),
+            F.row_number().over(Window.orderBy(*order)).alias("rank"),
             "doc_id",
             "documentID",
             score,
@@ -1297,8 +1306,6 @@ class SearchEngine:
                 .alias("num_typos"),
                 F.sum("exact_w").cast("int").alias("number_exact_words"),
             ],
-            "rank_w": Window.orderBy(F.desc("score"), F.asc("doc_id")),
-            "order": [F.desc("score"), F.asc("doc_id")],
         }
         return self._expr_cache
 

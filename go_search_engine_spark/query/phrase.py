@@ -17,8 +17,8 @@ Plan shape (scale notes):
   phrase tokens --exact terms--> SearchEngine.decoded_postings WITH
   positions (the BM25 engine's posting reader: bucket-pruned, ``term IN``
   pushdown, Arrow-batched decode; read on the driver into one partition
-  when the terms' df bound fits one Arrow batch, else a Spark scan +
-  decode hash-partitioned by doc_id) --> broadcast join against the
+  when the terms' df bound is at most DRIVER_READ_MAX_ROWS, else a Spark
+  scan + decode hash-partitioned by doc_id) --> broadcast join against the
   (term, slot) phrase table --> explode positions --> anchor = position
   - slot --> groupBy(doc, field, anchor) having all n slots present
   (bit_or slot mask; countDistinct for 64+-token phrases) --> per-doc

@@ -35,22 +35,9 @@ def spark():
 
 @pytest.fixture
 def spark_read(monkeypatch):
-    """Force the distributed posting read (SearchEngine._block_rows) with
-    a one-batch bound of 0: for every engine opened or reloaded while the
-    test runs, and for the engines passed to the returned function. The
-    small test indexes otherwise take the driver read."""
-    from go_search_engine_spark.query.engine import SearchEngine
+    """Force the distributed posting read (SearchEngine._block_rows) for
+    the whole test with a driver-read bound of 0 rows. The small test
+    indexes otherwise take the driver read."""
+    import go_search_engine_spark.query.engine as engine_mod
 
-    opened = SearchEngine._open_frames
-
-    def open_distributed(self):
-        opened(self)
-        self._batch_rows = 0
-
-    monkeypatch.setattr(SearchEngine, "_open_frames", open_distributed)
-
-    def force(*engines):
-        for eng in engines:
-            monkeypatch.setattr(eng, "_batch_rows", 0)
-
-    return force
+    monkeypatch.setattr(engine_mod, "DRIVER_READ_MAX_ROWS", 0)

@@ -198,7 +198,6 @@ def test_proximity_search(engine):
 def test_spark_read_path(spark, tmp_path_factory, engine, spark_read):
     """The phrase, proximity and rare-term semi-join checks above on the
     distributed posting read instead of the driver read."""
-    spark_read(engine)
     test_adjacency_and_counts(engine)
     test_three_token_phrase(engine)
     test_duplicate_token_phrase(engine)

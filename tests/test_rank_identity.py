@@ -68,7 +68,6 @@ def test_rank_identical(engine_and_oracle, qid, query, k):
 def test_rank_identical_spark_read(engine_and_oracle, spark_read, qid, query, k):
     """test_rank_identical on the distributed posting read (scan +
     mapInArrow decode + doc_id exchange) instead of the driver read."""
-    spark_read(engine_and_oracle[0])
     test_rank_identical(engine_and_oracle, qid, query, k)
 
 

@@ -1,7 +1,7 @@
 """The two posting reads behind SearchEngine.decoded_postings: a cold
-query whose candidate postings fit one Arrow batch (sum(df) x |fields| <=
-``spark.sql.execution.arrow.maxRecordsPerBatch``) is read and decoded on
-the driver and enters the plan as ONE partition -- no blocks scan, no
+query whose candidate postings are bounded by at most
+DRIVER_READ_MAX_ROWS (sum(df) x |fields|) is read and decoded on the
+driver and enters the plan as ONE partition -- no blocks scan, no
 Python decode stage, no exchange before top-k; a larger one keeps the
 pruned Spark scan + mapInArrow decode and exactly one doc_id exchange.
 Rank identity on both reads is pinned in test_rank_identity, test_phrase,
@@ -11,6 +11,8 @@ test_service_movies and test_delta.
 from __future__ import annotations
 
 import pytest
+
+import go_search_engine_spark.query.engine as engine_mod
 
 from go_search_engine_spark.build.builder import IndexBuilder
 from go_search_engine_spark.config import IndexSettings
@@ -81,9 +83,9 @@ def test_forced_spark_read_keeps_scan_decode_and_one_exchange(
         assert "Exchange hashpartitioning(doc_id" in region
 
 
-def test_gate_is_one_batch_of_df_bounded_rows(spark, wh):
-    """At a bound exactly equal to the batch size the driver reads; one
-    row over, Spark does. The bound is sum(df) x |fields| over the
+def test_gate_is_df_bounded_rows(spark, wh, monkeypatch):
+    """At a bound exactly equal to DRIVER_READ_MAX_ROWS the driver reads;
+    one row over, Spark does. The bound is sum(df) x |fields| over the
     distinct candidate terms, and both reads rank identically."""
     eng = SearchEngine(spark, wh, "rp")
     fields = eng.settings.searchable_fields
@@ -91,10 +93,47 @@ def test_gate_is_one_batch_of_df_bounded_rows(spark, wh):
     bound = int(cand.drop_duplicates("term")["df"].sum()) * len(fields)
     assert bound > 0 and len(fields) == 2
     got = {}
-    for batch, on_driver in ((bound, True), (bound - 1, False)):
-        eng._batch_rows = batch
+    for limit, on_driver in ((bound, True), (bound - 1, False)):
+        monkeypatch.setattr(engine_mod, "DRIVER_READ_MAX_ROWS", limit)
         assert eng._block_rows(cand, fields)[1] is on_driver
         got[on_driver] = [
             tuple(r) for r in eng.search_from_cand(cand, fields, 10, 2).collect()
         ]
     assert got[True] == got[False] and got[True]
+
+
+def test_pending_tombstones_take_the_spark_read(
+    spark, wh, tmp_path, monkeypatch
+):
+    """Under pending tombstones the merged ``df`` no longer bounds the
+    base block rows: the base blocks keep every deleted posting until a
+    compaction. Deleting most of a term's docs in delta mode must not
+    send its whole base posting list through the driver, however large
+    the driver-read bound."""
+    import shutil
+
+    from go_search_engine_spark.build.maintenance import IndexMaintenance
+
+    shutil.copytree(f"{wh}/rp", f"{tmp_path}/rp")
+    eng = SearchEngine(spark, str(tmp_path), "rp")
+    fields = eng.settings.searchable_fields
+    hits = eng.search("tokenizer", k=1000, typo_tolerance=False).collect()
+    assert len(hits) >= 4
+    victims = [r["documentID"] for r in hits[: len(hits) * 3 // 4]]
+    IndexMaintenance(spark, str(tmp_path), "rp").delete_documents(
+        victims, mode="delta"
+    )
+    eng = SearchEngine(spark, str(tmp_path), "rp")
+    assert eng._tomb is not None
+    cand = eng.candidate_terms(["tokenizer"], typo_tolerance=False)
+    bound = int(cand.drop_duplicates("term")["df"].sum()) * len(fields)
+    base_rows, on_driver = eng._block_rows(cand, fields)
+    assert base_rows.count() > bound  # the merged df undercounts
+    monkeypatch.setattr(
+        engine_mod, "DRIVER_READ_MAX_ROWS", 10 * base_rows.count()
+    )
+    assert eng._block_rows(cand, fields)[1] is False
+    left = eng.search("tokenizer", k=1000, typo_tolerance=False).collect()
+    assert sorted(r["documentID"] for r in left) == sorted(
+        r["documentID"] for r in hits[len(victims):]
+    )

@@ -449,7 +449,6 @@ def test_highlight_offsets(service):
 
 def test_highlight_offsets_spark_read(service, spark_read):
     """test_highlight_offsets on the distributed posting read."""
-    spark_read(service.engine)
     test_highlight_offsets(service)
 
 
@@ -476,14 +475,20 @@ def test_include_field_matches(service):
     assert "field_matches" not in r2.hits[0]
 
 
-def test_search_single_pass_scan(service, monkeypatch, spark_read):
+def test_search_single_pass_scan(service, monkeypatch):
     """The ranked frame is persisted, so a whole service request (total
     count + page slice) decodes the candidate posting blocks EXACTLY as
-    many times as one engine pass -- never twice -- on both posting
-    reads. Measured with an accumulator counting block rows entering the
-    decoder (job counts are meaningless under AQE: every exchange
-    materialization is its own job); the driver read adds to it on the
-    driver, at plan construction."""
+    many times as one engine pass -- never twice. Measured with an
+    accumulator counting block rows entering the decoder (job counts are
+    meaningless under AQE: every exchange materialization is its own
+    job).
+
+    Only the Spark read pins single EXECUTION: there the decode runs in
+    the frame's tasks, so a second execution of the ranked frame would
+    count twice. The driver read decodes at plan construction, so on it
+    the count pins that a service request builds the posting read once
+    (no second plan for the total count); executing the frame twice
+    would leave it unchanged."""
     import go_search_engine_spark.query.engine as eng_mod
 
     eng = service.engine
@@ -501,17 +506,20 @@ def test_search_single_pass_scan(service, monkeypatch, spark_read):
     monkeypatch.setattr(eng_mod, "decode_blocks_arrow", counting)
     for path in ("driver", "spark"):
         if path == "spark":
-            spark_read(eng)
+            monkeypatch.setattr(eng_mod, "DRIVER_READ_MAX_ROWS", 0)
         start = acc.value
         eng.search("matrix neo", k=10, typo_tolerance=False).collect()
         one_pass = acc.value - start
         assert one_pass > 0, path
         service.search(SearchRequest(query="matrix neo", typo_tolerance=False))
         service_pass = acc.value - start - one_pass
+        what = (
+            "executed" if path == "spark" else "planned (posting read built)"
+        )
         assert service_pass == one_pass, (
             f"{path} read: service request decoded {service_pass} block "
             f"rows vs {one_pass} for a single engine pass -- the ranked "
-            "frame is being executed more than once"
+            f"frame is being {what} more than once"
         )
 
 
