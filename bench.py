@@ -439,14 +439,14 @@ def run_queries(
         "valu tabel", k=10, typo_tolerance=True).collect())
     q("bm25_wand_topk", lambda: wand(
         engine, "data value table", k=10, typo_tolerance=False).collect())
-    # the forced block-max path (auto mode falls back below its cost gate
-    # at this scale; measure the pruned machinery explicitly too)
+    # the forced anchored plan (auto mode falls back below its cost gate
+    # at this scale; measure the pruned plan explicitly too)
     q("bm25_wand_forced", lambda: wand(
         engine, "data value table", k=10, typo_tolerance=False,
         prune=True).collect())
 
-    # the single-phase anchored middle tier (auto picks it when the rare
-    # anchor is medium-sized; forced here by lowering the tier-1 gate)
+    # the anchored plan as auto picks it, reached by lowering the
+    # posting gate
     import go_search_engine_spark.query.wand as _wand_mod
 
     def _anchored():
@@ -559,7 +559,7 @@ def warm_latency_profile(engine, wand, n: int = 15) -> dict:
 def latency_150k(corpus_path: str, n_docs: int) -> dict:
     """Query latency against the SCALING corpus index (150k docs, ~30x
     the sf0.1 headline index): the scale where the vocab cache, typo
-    candidate caps, WAND block-max tiers and partial-warm machinery
+    candidate caps, WAND's rare-anchored plan and partial-warm machinery
     actually bind. Round 4's latency claims were only ever measured at
     the 5k-doc index -- this closes that evidence gap. The warehouse is
     cached across runs (builder resume makes the rebuild a no-op), so
@@ -609,9 +609,10 @@ def latency_150k(corpus_path: str, n_docs: int) -> dict:
 
         q("bm25_exhaustive", lambda: engine.search(
             "tokenizer buffer stream", k=10, typo_tolerance=False).collect())
+        auto_report: dict = {}
         q("bm25_wand_auto", lambda: wand_topk(
             engine, "tokenizer buffer stream", k=10,
-            typo_tolerance=False).collect())
+            typo_tolerance=False, report=auto_report).collect())
         q("bm25_wand_forced", lambda: wand_topk(
             engine, "tokenizer buffer stream", k=10, typo_tolerance=False,
             prune=True).collect())
@@ -626,6 +627,9 @@ def latency_150k(corpus_path: str, n_docs: int) -> dict:
         out["wand_auto_beats_exhaustive"] = (
             qs["bm25_wand_auto"] < qs["bm25_exhaustive"]
         )
+        # the plan auto chose: when it is "exhaustive", the comparison
+        # above times the same plan twice and shows only noise
+        out["wand_auto_mode"] = auto_report.get("mode")
         sweep = [
             "tokenizer buffer stream", "func return err",
             "posting list merge", "index builder", "var channel mutex",
@@ -707,6 +711,7 @@ def compact_summary(result: dict) -> dict:
             "wand_auto_beats_exhaustive": l150.get(
                 "wand_auto_beats_exhaustive"
             ),
+            "wand_auto_mode": l150.get("wand_auto_mode"),
         }
     c["summary"] = s
     # hard size guarantee: the whole point of this line is surviving a

@@ -13,7 +13,7 @@ file holds the extra instrumentation the optimization round needs):
 Usage:
   python bench_extra.py plans  <tag>     # capture explains to plans/r06
   python bench_extra.py time   [reps]    # timed sweep + job counts
-  python bench_extra.py wand             # two-phase WAND deep profile
+  python bench_extra.py wand             # anchored WAND deep profile
 """
 
 from __future__ import annotations
@@ -144,7 +144,8 @@ def cmd_time(reps: int = 3) -> None:
 
 
 def cmd_wand() -> None:
-    """Two-phase WAND deep profile: section walls + job counts."""
+    """Anchored WAND deep profile, forced and auto (posting gate
+    lowered): walls + job counts."""
     from go_search_engine_spark.query.wand import wand_topk
 
     spark, engine, _ = setup()

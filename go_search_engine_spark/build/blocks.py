@@ -3,8 +3,8 @@
 Flat postings -> per-(term, field, salt) docID-ordered blocks of
 ``block_size`` entries: doc_ids delta+varint, tfs/dls varint, positions
 nested-varint, plus block metadata (n, first/last doc, and the
-(max_tf, min_dl) upper-bound pair -- see the BLOCKS_SCHEMA note below)
-enabling WAND block skipping without decode.
+(max_tf, min_dl) upper-bound pair -- see the BLOCKS_SCHEMA note below).
+WAND skips blocks without decoding them by their first/last doc.
 
 The reference keeps impact-ordered (tf desc) uncompressed lists
 (/root/reference/internal/indexing/service.go:290-298); docID-ordered
@@ -45,7 +45,7 @@ from ..functions.codec import decode_positions, delta_decode, varint_decode
 # entry in the block -- a valid (slightly looser) WAND upper bound that
 # does NOT require idf at build time, so the blocks job never joins
 # against term_stats (it only reads its df column for the salt set;
-# see builder._finalize).
+# see builder._finalize). No query reads the pair today.
 BLOCKS_SCHEMA = (
     "bucket int, term string, field string, salt int, block_id int, n int, "
     "first_doc long, last_doc long, doc_ids binary, tfs binary, dls binary, "

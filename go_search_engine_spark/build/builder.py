@@ -600,9 +600,9 @@ class IndexBuilder:
                 )
                 # per-(term, field) (max_tf, min_dl): BM25 is monotone
                 # increasing in tf / decreasing in dl, so these bound
-                # every posting of the pair -- the WAND upper bound
-                # becomes a driver-side lookup (query/wand.py) instead
-                # of a per-query block-metadata job
+                # every posting of the pair. Queries read only the
+                # field count (the warm budget); the bound values have
+                # no reader since WAND kept only its anchored plan
                 fb = (
                     f.groupBy("term", "field")
                     .agg(F.max("tf").alias("max_tf"), F.min("dl").alias("min_dl"))

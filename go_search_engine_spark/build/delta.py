@@ -42,8 +42,7 @@ it| (from re-tokenizing the old rows + the new batch), idf recomputed for EVERY
 term from the new N (term_stats is vocab-sized -- rewriting it is cheap
 relative to the corpus), total_dl +- integer deltas => avgdl exact,
 field_bounds merged monotonically (sound, possibly loose after deletes
--- only WAND upper bounds read them, and WAND serves the exhaustive plan
-while deltas are pending anyway).
+-- queries read only their field count).
 
 Queries under pending deltas: candidate-term postings = pruned base
 block scan ∪ delta-postings scan (term-filtered; delta files are small

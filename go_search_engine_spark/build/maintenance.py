@@ -343,15 +343,15 @@ class IndexMaintenance:
                     "(e.g. dropDuplicates(['documentID'])) before upserting"
                 )
             # max doc_id from stats.json (maintained by every commit path)
-            # -- zero jobs; the agg fallback covers indexes whose stats
-            # predate the field. Stale-high is safe (ids only need to not
-            # collide), and the empty-index case coalesces to -1 either way.
+            # -- zero jobs. Stale-high is safe (ids only need to not
+            # collide); an emptied index records -1.
             stats_now = load_stats(self.base)
-            if "max_doc_id" in stats_now:
-                max_id = int(stats_now["max_doc_id"])
-            else:
-                row0 = docs.agg(F.max("doc_id")).collect()[0][0]
-                max_id = int(row0) if row0 is not None else -1
+            if "max_doc_id" not in stats_now:
+                raise ValueError(
+                    f"index at {self.base} predates the stats.json "
+                    "max_doc_id field; rebuild it with the current builder"
+                )
+            max_id = int(stats_now["max_doc_id"])
             inserts = joined.filter(F.col("doc_id").isNull()).drop("doc_id")
             if n_ins > 0:
                 # dense ids appended after the current maximum via the
@@ -636,7 +636,7 @@ class IndexMaintenance:
             )
             if new_max_id is not None:
                 stats["max_doc_id"] = max(
-                    int(stats.get("max_doc_id", -1)), int(new_max_id)
+                    int(stats["max_doc_id"]), int(new_max_id)
                 )
             # atomic replace: this is THE commit point (readers ignore gen
             # dirs above delta_gen and resolve term_stats via term_stats_gen)
@@ -706,7 +706,7 @@ class IndexMaintenance:
         LSM/Lucene segment merge: visible base + delta postings merge
         into one repartition-by-(term) rewrite, tombstoned rows drop, and
         stats/blocks are refreshed from the compacted table -- the
-        pruned WAND tiers serve again afterwards. Returns the file count
+        anchored WAND plan serves again afterwards. Returns the file count
         after compaction."""
         import glob
 

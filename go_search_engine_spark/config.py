@@ -24,17 +24,12 @@ TYPO_PENALTY_2 = 0.6
 # candidates ordered by (distance asc, term asc).
 MAX_TYPO_CANDIDATES = 500
 
-# Auto-mode middle tier: when the RARE token's candidate postings fit
-# under this bound, a single-phase rare-anchored plan (decode the rare
-# anchor in full, chunk-join the other tokens once, no theta round-trip)
-# beats the 2-phase protocol -- the extra seed/theta jobs only pay for
-# themselves when the rare anchor itself is huge.
-WAND_SINGLE_PHASE_MAX_RARE = 2_000_000
-
-# Block-max WAND cost gate: below this estimated candidate posting volume
-# (sum of candidate-term df), the pruned path's extra metadata/seed jobs
-# cost more than simply decoding everything once, so wand_topk falls back
-# to the single-pass exhaustive plan (rank-identical either way).
+# WAND auto gate (query/wand.py): below this estimated candidate posting
+# volume (sum of candidate-term df) wand_topk takes the single-pass
+# exhaustive plan instead of the rare-anchored one (rank-identical either
+# way). Not yet derived from measurements: on the 150k-doc scaling index
+# it sends every measured query to exhaustive, including rare-anchor
+# queries where the anchored plan is faster (ROADMAP direction 5).
 WAND_MIN_POSTINGS = 500_000
 
 

@@ -295,6 +295,13 @@ class SearchEngine:
         self._stats_sig = (st.st_mtime_ns, st.st_size)
         self.settings = load_settings(self.base)
         self.stats = load_stats(self.base)
+        if "max_doc_id" not in self.stats:
+            # WAND's chunk gate and upsert id assignment read it; every
+            # build and commit path writes it
+            raise ValueError(
+                f"index at {self.base} predates the stats.json max_doc_id "
+                "field; rebuild it with the current builder"
+            )
         from ..build.delta import table_path
 
         # every table resolves through the stats.json pointers
@@ -320,8 +327,8 @@ class SearchEngine:
             term_stats_path(self.base, self.stats)
         )
         if "field_bounds" not in self.term_stats.columns:
-            # per-(term, field) (max_tf, min_dl) bounds: WAND's upper
-            # bound and the warm budget's posting-row estimate read them
+            # per-(term, field) (max_tf, min_dl) bounds: the warm
+            # budget's posting-row estimate reads their field count
             raise ValueError(
                 f"index at {self.base} predates the term_stats "
                 "field_bounds column; rebuild it with the current builder"
@@ -426,48 +433,6 @@ class SearchEngine:
                 .sort_values("term", ignore_index=True)
             )
         return self._vocab_pd
-
-    def term_field_ub(
-        self, terms: list[str], fields: list[str]
-    ) -> dict[str, float]:
-        """Per-term BM25 tf-part upper bound SUMMED over the queried
-        fields, from the build-time per-(term, field) (max_tf, min_dl)
-        bounds in term_stats -- driver-side, zero jobs when the vocab is
-        cached, one tiny ``term IN`` collect otherwise. The per-field SUM
-        is required for soundness: scoring sums tf across fields before
-        BM25 saturation, and sat(tf_a + tf_b) <= bound_a + bound_b
-        (concave, sat(0) = 0)."""
-        vocab = self._vocab()
-        tset = set(terms)
-        if vocab is not None:
-            sub = vocab[vocab["term"].isin(tset)]
-            pairs = zip(sub["term"], sub["field_bounds"])
-        else:
-            rows = (
-                self.term_stats.filter(F.col("term").isin(sorted(tset)))
-                .select("term", "field_bounds")
-                .collect()
-            )
-            pairs = ((r["term"], r["field_bounds"]) for r in rows)
-        avgdl = float(self.stats["avgdl"])
-        out: dict[str, float] = {}
-        for term, fb in pairs:
-            tot = 0.0
-            for f_name, b in (fb or {}).items():
-                if f_name in fields:
-                    mtf, mdl = float(b["max_tf"]), float(b["min_dl"])
-                    tot += (
-                        mtf
-                        * (BM25_K1 + 1.0)
-                        / (
-                            mtf
-                            + BM25_K1
-                            * (1.0 - BM25_B + BM25_B * mdl / avgdl)
-                        )
-                    )
-            if tot > 0.0:
-                out[term] = tot
-        return out
 
     def _token_gates(
         self,
@@ -1188,7 +1153,7 @@ class SearchEngine:
         self, cand: pd.DataFrame, fields: list[str], k: int, n_tokens: int
     ) -> DataFrame:
         """Exhaustive scoring plan from a prepared candidate table (shared
-        by search() and the WAND exhaustive tiers): scan_candidates ->
+        by search() and WAND's exhaustive plan): scan_candidates ->
         score_and_intersect -> finish_topk, warm or cold. Cold mode
         arrives clustered by doc_id from decoded_postings (one partition
         from a driver read, one doc_id exchange from a Spark read), warm
@@ -1298,7 +1263,7 @@ class SearchEngine:
                 # (token, doc) BY CONSTRUCTION, so a plain count IS the
                 # distinct-token count. countDistinct would plan an
                 # extra partial-dedup aggregation level over the g3
-                # frame on every query (cold, warm, WAND phases, typo).
+                # frame on every query (cold, warm, both WAND sides, typo).
                 F.count(F.lit(1)).alias("_nt"),
                 F.sum("contrib").alias("score"),
                 F.sum(F.when(F.col("dist") > 0, 1).otherwise(0))
@@ -1317,7 +1282,7 @@ class SearchEngine:
         (reference service.go:443-509 -- the is_full_word flag the
         reference declares but never writes is populated at build here).
         The ONE BM25 scoring definition: cold, warm, multi-search and
-        every WAND phase score through it.
+        both sides of WAND's anchored plan score through it.
 
         ``no_typo_tolerance_fields``: typo-matched entries in these fields
         are dropped -- only exact matches count there. The reference

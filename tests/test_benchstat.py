@@ -262,6 +262,7 @@ def _full_result() -> dict:
                         "bm25_wand_forced": 2.1, "bm25_typo": 1.8,
                         "phrase": 1.2},
             "wand_auto_beats_exhaustive": True,
+            "wand_auto_mode": "anchored",
             "latency_warm": {"exhaustive": {"p50_ms": 410.0,
                                             "p95_ms": 600.0},
                              "wand": {"p50_ms": 380.0, "p95_ms": 550.0}},
@@ -293,6 +294,7 @@ def test_compact_summary_fits_driver_tail_and_keeps_headlines():
     assert s["warm_p50_ms"] == 247.8
     assert s["build_wall_sec"] == 7.23
     assert s["latency_150k"]["wand_auto_beats_exhaustive"] is True
+    assert s["latency_150k"]["wand_auto_mode"] == "anchored"
 
 
 def test_compact_summary_sheds_detail_never_headlines():

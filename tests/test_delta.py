@@ -227,12 +227,13 @@ def test_compaction_folds_deltas(spark, twin):
 
     eng = SearchEngine(spark, wh, "dlt")
     phrase_search(eng, "func return").collect()
-    # and the pruned WAND tiers are live again
+    # and the anchored WAND plan is live again
     rep: dict = {}
-    got = wand_topk(eng, "tokenizer", k=20, report=rep, prune=True).collect()
-    assert rep["mode"] == "two_phase"
+    got = wand_topk(eng, "tokenzer retrun", k=20, report=rep,
+                    prune=True).collect()
+    assert rep["mode"] == "anchored"
     assert _key(got) == _key(
-        eng.search("tokenizer", k=20).collect()
+        eng.search("tokenzer retrun", k=20).collect()
     )
 
 

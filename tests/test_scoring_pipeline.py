@@ -1,12 +1,13 @@
 """One BM25 scoring definition: every ranked path -- cold, warm (full
-and partial), multi-search and each phase of the forced two-phase WAND
--- scores through ``SearchEngine.score_and_intersect``; and an index
-whose term_stats lacks the per-field bounds WAND needs is refused at
-open instead of scored through a second upper-bound implementation.
+and partial), multi-search and both sides of the anchored WAND plan --
+scores through ``SearchEngine.score_and_intersect``; and an index that
+lacks the per-field bounds or the max_doc_id the query paths read is
+refused at open with a rebuild hint.
 """
 
 from __future__ import annotations
 
+import json
 import shutil
 
 import pytest
@@ -90,9 +91,8 @@ def test_every_path_scores_through_score_and_intersect(spark, idx, calls):
     pruned = wand_topk(
         cold, q, k=10, typo_tolerance=False, report=rep, prune=True
     )
-    assert rep["mode"] == "two_phase"
-    # the rare anchor, then phase 1 (and phase 2 when theta leaves docs)
-    assert calls[0] >= 2
+    assert rep["mode"] == "anchored"
+    assert calls[0] == 2  # the rare side and the other side
     assert _rows(pruned) == want
 
 
@@ -105,3 +105,27 @@ def test_open_without_field_bounds_raises(spark, idx, tmp_path):
     ts.write.mode("overwrite").parquet(str(dst / "term_stats"))
     with pytest.raises(ValueError, match="field_bounds.*rebuild"):
         SearchEngine(spark, str(tmp_path), "one_nofb")
+
+
+def test_open_without_max_doc_id_raises(spark, idx, tmp_path):
+    """stats.json without max_doc_id (an index from before the field was
+    written) is refused at open, and by an upsert, with a rebuild hint:
+    WAND's chunk gate and upsert id assignment read it."""
+    from go_search_engine_spark.build.maintenance import IndexMaintenance
+
+    dst = tmp_path / "one_nomax"
+    shutil.copytree(f"{idx}/one", dst)
+    stats = json.loads((dst / "stats.json").read_text())
+    del stats["max_doc_id"]
+    (dst / "stats.json").write_text(json.dumps(stats))
+    with pytest.raises(ValueError, match="max_doc_id.*rebuild"):
+        SearchEngine(spark, str(tmp_path), "one_nomax")
+    batch = spark.createDataFrame(
+        [("new-doc", "r", "p", "c", "go", "tokenizer return")],
+        "documentID string, repo string, path string, commit string, "
+        "lang string, content string",
+    )
+    with pytest.raises(ValueError, match="max_doc_id.*rebuild"):
+        IndexMaintenance(spark, str(tmp_path), "one_nomax").upsert_documents(
+            batch, mode="delta"
+        )

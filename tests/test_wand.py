@@ -1,6 +1,7 @@
-"""Block-max WAND pruning must be rank-identical to the exhaustive engine
-(and to the oracle, transitively via test_rank_identity), and must
-actually prune work on skewed queries.
+"""The rare-anchored WAND plan must be rank-identical to the exhaustive
+engine (and to the oracle, transitively via test_rank_identity) on both
+posting reads and with chunk pruning on, and must actually restrict the
+scored docs on skewed queries.
 """
 
 from __future__ import annotations
@@ -62,14 +63,23 @@ def test_wand_rank_identical(engine, query, k, typos):
 
 def test_wand_auto_falls_back_at_small_scale(engine):
     """Below WAND_MIN_POSTINGS the auto gate must take the single-pass
-    exhaustive plan (still rank-identical)."""
+    exhaustive plan (still rank-identical), and a single-token query
+    takes it even under prune=True: its anchor would be the whole
+    query."""
     report: dict = {}
     pruned = wand_topk(
         engine, "deltaEncode varintDecode", k=10, report=report
     ).collect()
+    assert report["mode"] == "exhaustive"
     assert report["pruned_path"] is False
     assert report["est_postings"] < 500_000
     _same(pruned, engine.search("deltaEncode varintDecode", k=10).collect())
+    report.clear()
+    single = wand_topk(
+        engine, "tokenizer", k=10, report=report, prune=True
+    ).collect()
+    assert report["mode"] == "exhaustive"
+    _same(single, engine.search("tokenizer", k=10).collect())
 
 
 def test_wand_shared_typo_candidate(engine):
@@ -88,20 +98,64 @@ def test_wand_shared_typo_candidate(engine):
 
 
 def test_wand_actually_prunes(engine):
+    """Rare+head query: the anchored plan scores only the rare token's
+    docs, far fewer than the index holds, and still answers exactly."""
     report: dict = {}
-    wand_topk(engine, "blockMaxWand func", k=5, typo_tolerance=False,
-              report=report, prune=True).collect()
-    # rare+head query: theta must exist and phase 2 must shrink below the
-    # full rare candidate set
-    assert report["theta"] is not None
-    assert report["n_phase2_docs"] < report["n_rare_docs"]
+    got = wand_topk(engine, "blockMaxWand func", k=5, typo_tolerance=False,
+                    report=report, prune=True).collect()
+    assert report["mode"] == "anchored"
+    assert 0 < report["n_rare_docs"] < engine.stats["N"]
+    _same(got, engine.search("blockMaxWand func", k=5,
+                             typo_tolerance=False).collect())
+
+
+@pytest.mark.parametrize("query,k,typos", QUERIES)
+def test_wand_chunk_pruned_rank_identical(engine, monkeypatch, query, k,
+                                          typos):
+    """The chunk-pruned branch (doc space over 8 chunks) stays
+    rank-identical: 16-id chunks cut the 400-doc fixture into 25 chunks,
+    so the other tokens' blocks are semi-joined against the rare docs'
+    chunks."""
+    import go_search_engine_spark.query.wand as wand_mod
+
+    monkeypatch.setattr(wand_mod, "CHUNK_SHIFT", 4)
+    assert (engine.stats["max_doc_id"] >> 4) + 1 > 8
+    exhaustive = engine.search(query, k=k, typo_tolerance=typos).collect()
+    pruned = wand_topk(
+        engine, query, k=k, typo_tolerance=typos, prune=True
+    ).collect()
+    _same(pruned, exhaustive)
+
+
+@pytest.mark.parametrize("read", ["driver", "spark"])
+def test_wand_anchor_both_reads(engine, request, monkeypatch, read):
+    """The rare anchor goes through engine.decoded_postings, so it is
+    read on the driver when small and by the Spark scan otherwise; both
+    give the exhaustive answer."""
+    if read == "spark":
+        request.getfixturevalue("spark_read")
+    on_driver = []
+    orig = SearchEngine._block_rows
+
+    def spy(self, cand, fields, positions=False):
+        out = orig(self, cand, fields, positions)
+        on_driver.append(out[1])
+        return out
+
+    monkeypatch.setattr(SearchEngine, "_block_rows", spy)
+    report: dict = {}
+    got = wand_topk(engine, "blockMaxWand func", k=10, report=report,
+                    prune=True).collect()
+    assert report["mode"] == "anchored"
+    assert on_driver == [read == "driver"]
+    _same(got, engine.search("blockMaxWand func", k=10).collect())
 
 
 @pytest.fixture(scope="module")
 def multifield_engine(spark, tmp_path_factory):
     """Multi-field index where some docs contain a term in BOTH fields:
-    scoring sums tf across fields, so per-field block bounds alone would
-    under-bound and could mis-prune (round-1 advice, wand.py:141)."""
+    scoring sums tf across fields before saturation, so each side of the
+    anchored plan must carry every queried field's entries of its docs."""
     wh = str(tmp_path_factory.mktemp("wh_wand_mf"))
     settings = IndexSettings(
         name="wand_mf",
@@ -142,9 +196,8 @@ def test_wand_multifield_rank_identical(multifield_engine, query, k):
 
 
 def test_wand_anchored_mode_rank_identical(engine, monkeypatch):
-    """Auto middle tier: when est_postings clears the cost gate but the
-    rare anchor is small, the single-phase anchored plan runs (no theta
-    round-trip) and stays rank-identical to exhaustive."""
+    """Auto gate: when est_postings clears WAND_MIN_POSTINGS, the anchored
+    plan runs and stays rank-identical to exhaustive."""
     import go_search_engine_spark.query.wand as wand_mod
 
     monkeypatch.setattr(wand_mod, "WAND_MIN_POSTINGS", 1)
@@ -157,19 +210,7 @@ def test_wand_anchored_mode_rank_identical(engine, monkeypatch):
         _same(got, engine.search(q, k=k, typo_tolerance=True).collect())
 
 
-def test_wand_anchored_vs_two_phase_identical(engine, monkeypatch):
-    """All three auto tiers agree on every fixture query."""
-    import go_search_engine_spark.query.wand as wand_mod
-
-    monkeypatch.setattr(wand_mod, "WAND_MIN_POSTINGS", 1)
-    monkeypatch.setattr(wand_mod, "WAND_SINGLE_PHASE_MAX_RARE", 0)
-    report: dict = {}
-    got = wand_topk(engine, "blockMaxWand func", k=10, report=report).collect()
-    assert report["mode"] == "two_phase"
-    _same(got, engine.search("blockMaxWand func", k=10).collect())
-
-
-# --- property-based sweep: forced 2-phase WAND vs exhaustive ---
+# --- property-based sweep: forced anchored WAND vs exhaustive ---
 
 from hypothesis import HealthCheck, given  # noqa: E402
 from hypothesis import settings as hsettings  # noqa: E402
@@ -194,11 +235,11 @@ _POOL = _word_pool()
     k=st.sampled_from([3, 10, 50]),
 )
 def test_property_wand_rank_identical(engine, words, typos, k):
-    """Any pool query x typo toggle x k: the forced 2-phase block-max
-    tier must return the identical ranked list (ids, scores, typo
-    accounting) as the exhaustive scorer. Block-max pruning bugs are
-    query-shape-dependent (theta trajectories, ties at the threshold,
-    single-block terms), which fixed query lists sample only pointwise."""
+    """Any pool query x typo toggle x k: the forced anchored plan must
+    return the identical ranked list (ids, scores, typo accounting) as
+    the exhaustive scorer. Anchor bugs are query-shape-dependent (which
+    token is rarest, candidate terms shared across tokens, single-block
+    terms), which fixed query lists sample only pointwise."""
     q = " ".join(words)
     exhaustive = engine.search(q, k=k, typo_tolerance=typos).collect()
     pruned = wand_topk(

@@ -67,13 +67,13 @@ def test_warm_rank_identity_full(spark, warm_idx):
     got = wand_topk(eng, "tokenzer retrun", k=20, report=rep).collect()
     assert rep["mode"] == "warm_exhaustive"
     assert _key(got) == _key(cold.search("tokenzer retrun", k=20).collect())
-    # forced pruning still exercises the block-max machinery, warm or not
+    # forced pruning still runs the anchored plan, warm or not
     rep2: dict = {}
     forced = wand_topk(
         eng, "tokenizer return", k=20, typo_tolerance=False,
         report=rep2, prune=True,
     ).collect()
-    assert rep2["mode"] == "two_phase"
+    assert rep2["mode"] == "anchored"
     assert _key(forced) == _key(
         cold.search("tokenizer return", k=20, typo_tolerance=False).collect()
     )
